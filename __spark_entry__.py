@@ -1,12 +1,13 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+The driver runs ``entry(spark)`` as a smoke check, then runs each
+``queries()[name]`` at sf=0.01 and compares it against the matching
+``oracle_sql()[name]`` via DuckDB (row count + schema + order-insensitive
+value hash).
 
-Thin view over ``insight_gp_import_spark.registry`` — operators are
+Thin view over ``insight_gp_import_spark.registry``: operators are
 implemented and declared in exactly one place (the ``@op`` decorator).
+``queries()`` covers every registered op, in registration order.
 """
 
 from __future__ import annotations

@@ -16,8 +16,9 @@ Design (see SURVEY.md for the full blueprint):
   projection, unique tie-break keys under every LIMIT, no raw
   arrays/structs in compared output, no RNG/clock/approx in oracled ops.
 - **Scale-aware.** Broadcast hints for dimension joins, AQE everywhere,
-  partitioned sinks, salting/bucketing notes in ``plans/``; tested at
-  sf0.001..0.1 locally, designed for 100 TB.
+  partitioned sinks, salting/bucketing; plan shapes are pinned in
+  ``tests/test_plans.py``. Tested at sf0.001..0.1 locally, designed for
+  100 TB.
 
 NOTE: ``/root/reference`` is empty in this environment (SURVEY.md §0), so
 docstrings cite the *driver contract* (__spark_entry__.py, TESTDATA.md,

@@ -125,12 +125,12 @@ def _norm_cell(v):
 def _canon_duck_type(t: str) -> str:
     """Canonicalize a DuckDB DESCRIBE column_type to Spark simpleString form.
 
-    Deliberately does NOT alias HUGEINT (int128) to bigint: the round-1
-    driver hash failure (agg_funnel_conversion, CORRECTNESS_r01.json) was a
-    DuckDB ``sum(int)`` → HUGEINT column whose *values* equalled Spark's
-    BIGINT — the driver's serialization-sensitive value-hash still rejected
-    it. Keeping hugeint distinct makes that class of failure fail locally,
-    pre-declaration (ADVICE.md item 2).
+    Deliberately does NOT alias HUGEINT (int128) to bigint: a DuckDB
+    ``sum(int)`` oracle column is HUGEINT, and even when its *values* equal
+    Spark's BIGINT output the driver's serialization-sensitive value-hash
+    rejects it (agg_funnel_conversion once failed that way). Keeping
+    hugeint distinct makes that class of failure fail locally,
+    pre-declaration.
     """
     t = t.strip()
     if t.endswith("[]"):

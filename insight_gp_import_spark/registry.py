@@ -6,7 +6,7 @@ registry, so an operator is implemented, tested, and declared in exactly
 one place.
 
 An op with ``oracle=None`` is declared rows-only (non-SQL-expressible:
-tolerant scans, sinks, approx sketches — __spark_entry__.py:36-37).
+tolerant scans, sinks, approx sketches).
 """
 
 from __future__ import annotations
@@ -100,527 +100,12 @@ def op(name: str, oracle: str | None = None, category: str = "") -> Callable[[Qu
     return deco
 
 
-# Explicit declaration order for the driver contract. The driver evaluates
-# queries() in dict-insertion order with a bounded per-round budget of 50
-# entries, so ops that still lack driver-side correctness evidence are
-# listed first. GENERATED — do not hand-edit: run
-#   python tools/rotate_driver_order.py
-# which recomputes the rotation queue from the registry plus the
-# CORRECTNESS_r*.json artifacts (never-hashed oracled ops round-robin by
-# category, then never-executed rows-only ops, then already-confirmed ops
-# oldest-evidence-first). tests/ asserts this file is in sync with the
-# generator (--check).
-DRIVER_ORDER: list[str] = [
-    "setop_intersect",
-    "setop_union_all",
-    "setop_union_distinct",
-    "sort_multi_nulls",
-    "stream_dedup",
-    "stream_session",
-    "stream_sliding",
-    "stream_stateful_totals",
-    "stream_tumbling",
-    "stream_upsert_sink",
-    "text_fingerprint",
-    "text_langid",
-    "text_quality",
-    "text_token_count",
-    "udaf_grouped_pandas",
-    "udf_pandas",
-    "udf_scalar",
-    "udtf_explode",
-    "udtf_python_tokenize",
-    "win_distribution",
-    "win_first_last",
-    "win_lag_lead",
-    "win_moving",
-    "win_range_interval",
-    "win_ranking",
-    "win_running",
-    "win_topn_per_group",
-    "agg_incremental_merge",
-    "corpus_apply_mix",
-    "corpus_decontaminate",
-    "corpus_mix_weights",
-    "corpus_pack_sequences",
-    "corpus_shard_shuffle",
-    "corpus_split_hash",
-    "dedup_cluster",
-    "dq_profile",
-    "dq_referential",
-    "embed_outlier_centroid",
-    "embed_quantize_int8",
-    "join_asof_tolerance",
-    "join_point_in_time",
-    "merge_cdc_apply",
-    "observe_metrics",
-    "pipeline_corpus_assembly",
-    "pipeline_file_lifecycle",
-    "pipeline_training_corpus",
-    "sample_stratified",
-    "scan_orc_roundtrip",
-    "sessionize_gap",
-    "sink_jdbc_gp",
-    "snapshot_diff",
-    "stream_stream_join",
-    "text_bm25_rank",
-    "text_dedup_span",
-    "text_ngram_counts",
-    "text_pii_mask",
-    "text_repetition",
-    "text_score_batch",
-    "ts_gap_fill",
-    "ts_resample_ohlc",
-    "win_ntile",
-    "win_quantile_bin_global",
-    "agg_bitmap_distinct",
-    "agg_grouping_id",
-    "agg_median_exact",
-    "ann_lsh_topk",
-    "corpus_curriculum_order",
-    "corpus_interleave_sources",
-    "corpus_rag_chunk",
-    "dedup_embed_lsh",
-    "dedup_simhash",
-    "dq_anomaly_zscore",
-    "dq_freshness",
-    "dq_uniqueness",
-    "embed_truncate_renorm",
-    "fn_array_hof",
-    "fn_regexp_extract_all",
-    "fn_variant",
-    "graph_degree_stats",
-    "graph_pagerank_unrolled",
-    "graph_triangle_count",
-    "join_interval_bucketed",
-    "join_lateral_topk",
-    "join_null_aware_anti",
-    "mm_audio_chunks",
-    "mm_image_phash",
-    "mm_video_scene_cuts",
-    "sample_systematic",
-    "sample_weighted_reservoir",
-    "scan_csv_tolerant",
-    "scan_jsonl",
-    "sim_search_range",
-    "sink_parquet_partitioned",
-    "sql_multi_cte",
-    "sql_parameterized",
-    "sql_pipe_syntax",
-    "stream_source_dir",
-    "stream_static_join",
-    "stream_transform_state",
-    "text_containment",
-    "text_sentence_split",
-    "text_unigram_logprob",
-    "ts_ewma_7",
-    "ts_interpolate_linear",
-    "ts_seasonality_profile",
-    "udf_pandas_iter",
-    "udf_pandas_window_agg",
-    "udtf_arrow_bigrams",
-    "win_cumulative_distinct",
-    "win_gaps_islands",
-    "agg_heavy_hitters",
-    "agg_markov_transitions",
-    "agg_multi_distinct",
-    "agg_regression",
-    "ann_ivf_topk",
-    "corpus_dedup_report",
-    "corpus_length_histogram",
-    "corpus_mix_entropy",
-    "dedup_cluster_bigstar",
-    "dedup_phash_hamming",
-    "dq_checksum_columns",
-    "dq_psi_drift",
-    "embed_binary_sign_pack",
-    "embed_norm_health",
-    "embed_sim_histogram",
-    "fn_collation",
-    "fn_luhn_check",
-    "fn_try_arithmetic",
-    "fn_url_parse",
-    "graph_bfs_distances",
-    "graph_common_neighbors",
-    "graph_degree_assortativity",
-    "graph_kcore_unrolled",
-    "join_or_decomposed",
-    "join_overlap_accounting",
-    "join_spatial_grid",
-    "maintenance_compact",
-    "mm_modality_balance",
-    "mm_patch_grid",
-    "pipeline_ann_index_build",
-    "pipeline_monitoring_health",
-    "setop_intersect_all",
-    "sink_parquet_bucketed",
-    "sink_parquet_range_sorted",
-    "sql_exists_subquery",
-    "sql_group_by_all",
-    "sql_named_window",
-    "sql_recursive_cte",
-    "stream_complete_mode",
-    "stream_dedup_within_watermark",
-    "text_collocation_pmi",
-    "text_novelty_score",
-    "text_readability",
-    "ts_cusum_change",
-    "ts_forward_fill",
-    "ts_yoy_growth",
-    "udf_map_in_arrow",
-    "win_rolling_corr",
-    "win_rolling_median",
-    "agg_argmax",
-    "agg_bitmask_profile",
-    "agg_pareto_cut",
-    "agg_skew_kurtosis",
-    "corpus_budget_apportion",
-    "corpus_dataset_card",
-    "corpus_epoch_reshuffle",
-    "corpus_span_corruption",
-    "dq_benford_check",
-    "dq_ks_drift",
-    "dq_rule_checks",
-    "embed_anisotropy_score",
-    "embed_centroid_drift",
-    "embed_hard_negatives",
-    "embed_kmeans_lloyd",
-    "embed_label_centroid_separation",
-    "embed_matryoshka_eval",
-    "embed_pca_power",
-    "fn_array_sort_comparator",
-    "fn_date_format",
-    "fn_mask",
-    "fn_width_bucket",
-    "graph_adamic_adar",
-    "graph_local_clustering",
-    "graph_modularity_brand_partition",
-    "graph_rich_club",
-    "join_asof_nearest",
-    "join_null_safe_eq",
-    "join_unknown_member",
-    "merge_scd2_incremental",
-    "pipeline_growth_dashboard",
-    "schema_evolution_catalog",
-    "sink_parquet_zorder",
-    "sink_partition_overwrite_dynamic",
-    "sql_join_hints",
-    "sql_limit_offset",
-    "sql_pivot_keyword",
-    "sql_unpivot_keyword",
-    "sql_values_inline_dim",
-    "text_confusable_normalize",
-    "text_langid_ngram",
-    "text_zipf_slope",
-    "ts_business_day_lag",
-    "ts_largest_silences",
-    "ts_seasonal_naive_forecast",
-    "ts_sma_crossover",
-    "win_max_drawdown",
-    "win_rolling_wau",
-    "win_running_vwap",
-    "agg_boolean_aggregates",
-    "agg_cohort_ltv",
-    "agg_gini_activity",
-    "agg_rfm_segments",
-    "corpus_alpha_sampling_weights",
-    "corpus_lsh_tuning_table",
-    "corpus_mix_kl_divergence",
-    "corpus_source_overlap",
-    "dedup_sorted_neighborhood",
-    "dedup_survivor_quality",
-    "dq_corr_matrix",
-    "dq_header_detail_reconcile",
-    "dq_join_key_skew",
-    "embed_dedup_threshold_sweep",
-    "embed_dims_variance_ranking",
-    "embed_prototype_selection",
-    "fn_explode_outer",
-    "fn_listagg",
-    "fn_slugify",
-    "fn_uuid5_surrogate",
-    "graph_hits_bipartite",
-    "join_bilateral_trade",
-    "join_calendar_dim_rollup",
-    "join_drill_across_facts",
-    "join_time_anti_abandonment",
-    "mm_audio_flac_real",
-    "mm_audio_meta_real",
-    "mm_image_meta_real",
-    "mm_video_meta_real",
-    "pipeline_dq_quarantine",
-    "scan_binary_files",
-    "scan_python_datasource",
-    "scan_xml_roundtrip",
-    "setop_except_all",
-    "sink_csv_gz_roundtrip",
-    "sql_distribute_sort_by",
-    "sql_identifier_dynamic",
-    "sql_lateral_view",
-    "stream_checkpoint_restart",
-    "text_boilerplate_sentences",
-    "text_char_entropy",
-    "text_langid_eval",
-    "text_prefix_dup_groups",
-    "ts_acf_lags",
-    "ts_deseasonalized_outliers",
-    "ts_seasonal_index_monthly",
-    "ts_wow_aligned",
-    "win_group_standardize",
-    "win_ratio_to_report",
-    "win_reorder_gap",
-    "agg_basket_lift",
-    "agg_conversion_latency",
-    "agg_decimal_money",
-    "agg_new_returning_users",
-    "agg_weighted_median",
-    "corpus_normalization_payoff",
-    "corpus_quality_filter_funnel",
-    "corpus_sampler_bias_check",
-    "dq_duplicate_payments",
-    "dq_hash_uniformity",
-    "dq_schema_contract",
-    "dq_sequence_gaps",
-    "fn_aes_roundtrip",
-    "fn_base64_roundtrip",
-    "fn_natural_sort_key",
-    "fn_text_sparkline",
-    "fn_timestamp_parse_multi",
-    "join_bitemporal_asof",
-    "join_fx_normalize",
-    "join_order_split_shipments",
-    "join_record_linkage_score",
-    "mm_image_jpeg_real",
-    "pipeline_experiment_readout",
-    "pipeline_feature_store_snapshot",
-    "pipeline_release_gate",
-    "scan_csv_corrupt_rescue",
-    "scan_csv_multiline_quoted",
-    "scan_partitioned_pruned",
-    "scan_text_roundtrip",
-    "sink_jsonl_roundtrip",
-    "sql_function_declared",
-    "sql_order_group_by_all",
-    "sql_relational_division",
-    "sql_star_except",
-    "sql_union_by_name",
-    "text_bpe_first_merges",
-    "text_kwic_concordance",
-    "text_lexical_diversity",
-    "text_oov_rate",
-    "text_tokenizer_fertility",
-    "ts_bollinger_breaks",
-    "ts_downsample_minmax",
-    "ts_periodogram_quantized",
-    "ts_rsi_zones",
-    "ts_theil_sen_trend",
-    "win_last_touch_attribution",
-    "win_rank_change",
-    "win_rolling_wau_bitmap",
-    "win_top_movers",
-    "agg_chi_square",
-    "agg_geometric_mean",
-    "agg_hll_partial_merge",
-    "agg_interarrival_percentiles",
-    "agg_peak_concurrency",
-    "agg_survival_km",
-    "agg_weekend_lift",
-    "dq_capture_recapture",
-    "dq_decimal_fit_audit",
-    "dq_fingerprint_collisions",
-    "dq_fk_inclusion_profile",
-    "dq_future_leakage_audit",
-    "dq_rare_categories",
-    "fn_haversine",
-    "fn_split_regex_vs_literal",
-    "fn_timezone_convert",
-    "join_allen_interval_relations",
-    "join_asof_policy_sensitivity",
-    "join_bridge_allocation",
-    "join_coverage_gaps",
-    "join_dynamic_partition_pruning",
-    "join_repeat_basket_similarity",
-    "scan_csv_null_tokens",
-    "scan_glob_filtered",
-    "scan_modified_after",
-    "scan_parquet_footer_stats",
-    "scan_recursive_lookup",
-    "sink_parquet_zstd",
-    "sql_session_variable",
-    "text_heaps_law_beta",
-    "text_langid_kappa",
-    "text_source_js_divergence",
-    "text_token_dispersion",
-    "text_vocab_coverage_bands",
-    "text_yule_k",
-    "ts_anomaly_consensus",
-    "ts_event_study_panel",
-    "ts_month_end_hockey_stick",
-    "ts_naive_interval_bands",
-    "ts_underwater_duration",
-    "ts_xmr_control_chart",
-    "win_event_context_window",
-    "win_indexed_performance",
-    "win_rolling_wau_sketch",
-    "win_skyline_frontier",
-    "win_time_decay_attribution",
-    "win_twap",
-    "win_z_chart",
-    "agg_ab_sample_size",
-    "agg_ab_test_lift",
-    "agg_abc_classes",
-    "agg_concentration_ratio",
-    "agg_contribution_waterfall",
-    "agg_customer_migration_matrix",
-    "agg_eb_shrunk_rates",
-    "agg_engagement_histogram",
-    "agg_fulfillment_lag",
-    "agg_hhi_concentration",
-    "agg_like_for_like_growth",
-    "agg_lorenz_deciles",
-    "agg_mad_robust",
-    "agg_mann_whitney_u",
-    "agg_mrr_bridge",
-    "agg_price_endings",
-    "agg_price_index",
-    "agg_price_volume_mix",
-    "agg_receivables_aging",
-    "agg_return_rate_brand",
-    "agg_runs_test",
-    "agg_semi_additive_eom",
-    "agg_spearman_corr",
-    "agg_target_encoding",
-    "agg_top_paths",
-    "agg_window_funnel_strict",
-    "agg_xyz_variability",
-    "dq_hll_error_bound",
-    "dq_quantile_sketch_bound",
-    "dq_rollup_consistency",
-    "scan_csv_multichar_delimiter",
-    "scan_ignore_corrupt_files",
-    "scan_parquet_merge_schema",
-    "scan_wholetext_files",
-    "text_bigram_logprob",
-    "ts_ar1_persistence",
-    "ts_forecast_combination",
-    "ts_historical_var",
-    "ts_interrupted_series",
-    "ts_ljung_box_residuals",
-    "ts_local_peaks_prominence",
-    "ts_mann_kendall",
-    "ts_max_gain_window",
-    "ts_negbin_fit_mom",
-    "ts_overdispersion_index",
-    "ts_record_days_rate",
-    "ts_revenue_pacing_curve",
-    "ts_spectral_entropy",
-    "ts_spike_type_attribution",
-    "win_time_to_nth_purchase",
-    "agg_anova_dow",
-    "agg_approx_distinct",
-    "agg_approx_quantile",
-    "agg_atp_allocation",
-    "agg_boxplot_fences",
-    "agg_collect_sorted",
-    "agg_count_distinct",
-    "agg_cramers_v",
-    "agg_cube",
-    "agg_did_estimate",
-    "agg_funnel_conversion",
-    "agg_global",
-    "agg_grouping_sets",
-    "agg_hash_groupby",
-    "agg_having",
-    "agg_hill_tail_index",
-    "agg_histogram",
-    "agg_holiday_proximity_lift",
-    "agg_markov_entropy_rate",
-    "agg_mode_per_group",
-    "agg_monetary_unit_sampling",
-    "agg_new_product_adoption",
-    "agg_new_vs_returning_aov",
-    "agg_pivot",
-    "agg_retention_cohort",
-    "agg_rollup",
-    "agg_rounding_drift_audit",
-    "agg_runrate_backtest",
-    "agg_salted_skew",
-    "agg_session_bounce_rate",
-    "agg_sessions_to_convert",
-    "agg_simpsons_paradox_check",
-    "agg_stats",
-    "agg_storage_tiering_policy",
-    "agg_theil_index",
-    "agg_trimmed_mean_exact",
-    "agg_unit_price_dispersion",
-    "agg_unpivot",
-    "agg_user_lifecycle_daily",
-    "agg_welch_t_test",
-    "agg_wilson_interval",
-    "dedup_exact",
-    "dedup_near_jaccard",
-    "dedup_near_minhash",
-    "distinct_project",
-    "embed_normalize",
-    "filter_compound",
-    "filter_in_between_like",
-    "dedup_embed_cosine",
-    "dedup_fuzzy_levenshtein",
-    "dedup_ngram_jaccard",
-    "filter_null_semantics",
-    "fn_array",
-    "fn_bitwise",
-    "fn_cast_try",
-    "fn_conditional",
-    "fn_datetime",
-    "fn_hash",
-    "fn_json",
-    "fn_math",
-    "fn_string",
-    "fn_struct_map",
-    "full_snapshot_latest",
-    "full_snapshot_scd2",
-    "ingest_manifest_dedup",
-    "join_asof",
-    "join_bloom_prune",
-    "join_broadcast",
-    "join_copurchase_pairs",
-    "join_cross",
-    "join_full_outer",
-    "join_inner_equi",
-    "join_left_anti",
-    "join_left_outer",
-    "join_left_semi",
-    "join_range_theta",
-    "join_right_outer",
-    "join_skew_salted",
-    "join_star_multiway",
-    "limit_topk",
-    "mm_decode_features",
-    "mm_frame_sample",
-    "multimodal_join",
-    "pipeline_batch_load",
-    "project_compute",
-    "sample_deterministic",
-    "scan_events_ns",
-    "scan_parquet",
-    "schema_evolution_union",
-    "setop_except",
-    "sim_knn_join",
-    "sim_search_topk",
-    "stream_rate_source",
-    "stream_watermark_late",
-    "subquery_scalar_correlated",
-    "text_normalize",
-    "text_stats",
-    "text_tfidf",
-]
-
-
 def load_all_ops() -> dict[str, Op]:
-    """Import every operator module, then order per ``DRIVER_ORDER``."""
+    """Import every operator module and return the registry.
+
+    Ops are in registration order, which follows the import list in
+    ``operators/__init__.py``; callers look ops up by name.
+    """
     import insight_gp_import_spark.operators  # noqa: F401  (side-effect imports)
 
-    ordered = {n: REGISTRY[n] for n in DRIVER_ORDER if n in REGISTRY}
-    ordered.update({n: o for n, o in REGISTRY.items() if n not in ordered})
-    return ordered
+    return REGISTRY

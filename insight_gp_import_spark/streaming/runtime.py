@@ -11,7 +11,6 @@ shuffle on.
 from __future__ import annotations
 
 import contextlib
-import os
 import tempfile
 from collections.abc import Iterator
 
@@ -54,25 +53,22 @@ def rocksdb_state_store(spark: SparkSession) -> Iterator[None]:
 @contextlib.contextmanager
 def scaled_state_partitions(spark: SparkSession) -> Iterator[None]:
     """Cap a stateful streaming query's state-partition count at the
-    session's actual parallelism (r12 optimization, guide §2: make
-    partitioning scale-adaptive, never a constant tuned for one box).
+    session's actual parallelism.
 
     Stateful operators pin ``numPartitions = spark.sql.shuffle.partitions``
     at first checkpoint and AQE does NOT coalesce streaming exchanges,
     so under a vanilla session (the graded driver's) every micro-batch
     of every stateful op runs the DEFAULT 200 state partitions — 200
     tasks + 200 state-store commits per batch on KB-scale batches. The
-    right count scales with cores: ``max(8, defaultParallelism)``,
-    overridable via $IGIS_STREAM_STATE_PARTITIONS for deployments whose
-    state (not compute) is the sizing constraint. The conf is only ever
-    LOWERED toward that cap (a session that already chose fewer — e.g.
-    bench.py's shuffle=8 — is untouched) and restored on exit; it is
-    read at query start, so the override is held through termination.
+    right count scales with cores, never a constant tuned for one box:
+    ``max(8, defaultParallelism)``. The conf is only ever LOWERED toward
+    that cap (a session that already chose fewer — e.g. bench.py's
+    shuffle=8 — is untouched) and restored on exit; it is read at query
+    start, so the override is held through termination.
     """
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
-    env = os.environ.get("IGIS_STREAM_STATE_PARTITIONS")
-    n = int(env) if env else max(8, spark.sparkContext.defaultParallelism)
+    n = max(8, spark.sparkContext.defaultParallelism)
     try:
         old_n = int(old)
     except (ValueError, TypeError):
@@ -133,18 +129,12 @@ def run_to_memory(
     A wrong answer is worse than no answer, so an unfinished query now
     raises.
     """
-    # r13 (VERDICT item 8): ``IGIS_CKPT_DIR`` points the THROWAWAY
-    # checkpoint at a chosen filesystem (e.g. /dev/shm) so the
-    # per-micro-batch floor can be decomposed into commit-log fsync vs
-    # state-store work. Contract-preserving opt-in: unset (the graded
-    # driver path) keeps tempfile's default exactly as before; the
-    # checkpoint is per-call throwaway either way, so durability
-    # semantics of the op are unchanged.
+    # The checkpoint is per-call throwaway, so it lives in a temp dir;
+    # TMPDIR picks its filesystem (e.g. /dev/shm to take commit-log
+    # fsync out of the per-micro-batch floor).
     with (
         scaled_state_partitions(df.sparkSession),
-        tempfile.TemporaryDirectory(
-            prefix="igis-ckpt-", dir=os.environ.get("IGIS_CKPT_DIR") or None
-        ) as ckpt,
+        tempfile.TemporaryDirectory(prefix="igis-ckpt-") as ckpt,
     ):
         q = (
             df.writeStream.format("memory")

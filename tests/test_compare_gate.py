@@ -1,11 +1,10 @@
 """Regression tests for the type-hardened local parity gate.
 
-Round 1's only driver hash failure (agg_funnel_conversion,
-CORRECTNESS_r01.json) was a DuckDB ``sum(int)`` → HUGEINT oracle column
-whose values equalled Spark's BIGINT output: the driver's
-serialization-sensitive value-hash rejected it while the old local
-compare (plain int() collapse) passed it. These tests pin that the
-hardened gate (compare.declared_types / type_family) now reproduces the
+A DuckDB ``sum(int)`` oracle column is HUGEINT. When its values equal
+Spark's BIGINT output, the driver's serialization-sensitive value-hash
+still rejects it (agg_funnel_conversion failed that way), while a plain
+int() collapse in the local compare would pass it. These tests pin that
+the hardened gate (compare.declared_types / type_family) reproduces the
 driver's behavior locally, pre-declaration.
 """
 

@@ -1,9 +1,7 @@
-"""Contract-sync invariants (round-4 verdict item 2): the SURVEY.md §2
-operator inventory and the registry must be the SAME id set, so the
-documented contract can never drift from the code again, and
-DRIVER_ORDER must be a complete permutation of the registry (the
-rotation tool rewrites it; a dropped or misspelled id would silently
-shrink driver coverage).
+"""Contract-sync invariants: the SURVEY.md §2 operator inventory, the
+registry and the driver contract (``__spark_entry__``) must expose the
+SAME op set, so neither the documented contract nor the driver's view
+can silently drift from the code.
 """
 
 from __future__ import annotations
@@ -25,10 +23,9 @@ def _survey_section2() -> str:
 
 
 def _registry():
-    from insight_gp_import_spark.registry import REGISTRY, load_all_ops
+    from insight_gp_import_spark.registry import load_all_ops
 
-    load_all_ops()
-    return REGISTRY
+    return load_all_ops()
 
 
 def test_survey_table_rows_match_registry():
@@ -45,37 +42,14 @@ def test_survey_table_rows_match_registry():
     assert not undocumented, f"registered ops with no §2 table row: {sorted(undocumented)}"
 
 
-def test_driver_order_is_registry_permutation():
-    from insight_gp_import_spark.registry import DRIVER_ORDER
+def test_driver_contract_exposes_every_op(spark):
+    """entry() returns rows, queries() lists every registered op, and
+    oracle_sql() holds exactly the ops that declare a DuckDB twin."""
+    import __spark_entry__ as contract
 
-    registry_ids = set(_registry())
-    assert len(DRIVER_ORDER) == len(set(DRIVER_ORDER)), "duplicate ids in DRIVER_ORDER"
-    unknown = set(DRIVER_ORDER) - registry_ids
-    assert not unknown, f"DRIVER_ORDER ids not in registry: {sorted(unknown)}"
-    missing = registry_ids - set(DRIVER_ORDER)
-    assert not missing, f"registry ops missing from DRIVER_ORDER: {sorted(missing)}"
+    assert contract.entry(spark).take(1)
 
-
-def test_driver_order_matches_generator_check():
-    """ADVICE r4: the DRIVER_ORDER header's GENERATED claim is enforced —
-    rotate_driver_order.py --check must report the committed block is
-    exactly what the generator would write from the current registry +
-    CORRECTNESS_r*.json artifacts (exit 0), so a stale or hand-edited
-    rotation can't pass CI.
-
-    r6 verdict item 2 (round-proofing): the generator consumes only
-    git-TRACKED evidence files, so the driver dropping an untracked
-    CORRECTNESS_r{N}.json after the builder's last commit no longer
-    flips this test red at judging time — a tree committed green stays
-    green until the new evidence is itself committed."""
-    import subprocess
-    import sys
-
-    proc = subprocess.run(
-        [sys.executable, str(REPO / "tools" / "rotate_driver_order.py"), "--check"],
-        capture_output=True,
-        text=True,
-        cwd=REPO,
-        timeout=120,
-    )
-    assert proc.returncode == 0, proc.stdout + proc.stderr
+    registry = _registry()
+    assert list(contract.queries()) == list(registry)
+    oracled = {name for name, o in registry.items() if o.oracle is not None}
+    assert set(contract.oracle_sql()) == oracled

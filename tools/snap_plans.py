@@ -1,6 +1,6 @@
-"""Dump explain("formatted") for a set of ops to plans/<dir>/<op>_<tag>.txt.
+"""Dump explain("formatted") for a set of ops to <dir>/<op>_<tag>.txt.
 
-Usage: python tools/snap_plans.py --ops a,b,c --tag before --dir plans/r12
+Usage: python tools/snap_plans.py --ops a,b,c --tag before --dir plan-dumps
 """
 
 from __future__ import annotations
@@ -16,7 +16,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--ops", required=True)
     ap.add_argument("--tag", required=True)
-    ap.add_argument("--dir", default="plans/r12")
+    ap.add_argument("--dir", required=True)
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
