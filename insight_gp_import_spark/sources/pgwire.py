@@ -9,13 +9,14 @@ and dialect themselves:
 
 - ``write_postgres_copy(df, cfg)`` loads a DataFrame over the real v3
   wire protocol with ``COPY <table> FROM STDIN`` — one connection per
-  partition via ``foreachPartition`` (the same parallel-writers shape
-  as ``write_jdbc``), text COPY encoding with the documented escape
-  rules. On a real Greenplum this is the FAST path (COPY through
-  the master; gpfdist-parallel external tables are its scale-out
-  sibling), and the client below speaks to an actual server unchanged:
-  startup → AuthenticationOk (trust) → simple Query → CopyInResponse →
-  CopyData stream → CopyDone → CommandComplete.
+  non-empty partition, each writer a ``mapInArrow`` task (the same
+  parallel-writers shape as ``write_jdbc``), text COPY encoding with
+  the documented escape rules. On a real Greenplum this is the FAST
+  path (COPY through the master; gpfdist-parallel external tables are
+  its scale-out sibling), and the client below speaks to an actual
+  server unchanged: startup → AuthenticationOk (trust) → simple Query
+  → CopyInResponse → CopyData stream → CopyDone → CommandComplete
+  (whose ``COPY n`` count is checked against the rows sent).
 - ``PgWireStubServer`` is a threaded in-process server speaking enough
   of the v3 protocol for that exchange (startup/SSLRequest, BEGIN/
   COMMIT, CREATE TABLE, COPY ... FROM STDIN) and records rows per
@@ -188,6 +189,9 @@ class PgWireClient:
     def __init__(self, host: str, port: int, user: str = "gpadmin",
                  database: str = "insight") -> None:
         self.sock = socket.create_connection((host, port), timeout=30)
+        # Every message is one small write followed by a wait for the
+        # reply; with Nagle on, that write waits for the peer's delayed ACK.
+        self.sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         params = (
             b"user\x00" + user.encode() + b"\x00"
             b"database\x00" + database.encode() + b"\x00\x00"
@@ -196,7 +200,10 @@ class PgWireClient:
         self.sock.sendall(struct.pack("!i", len(payload) + 4) + payload)
         self._until_ready()
 
-    def _until_ready(self) -> None:
+    def _until_ready(self) -> str:
+        """Read up to ReadyForQuery; returns the last CommandComplete tag
+        (``""`` if none came)."""
+        done = ""
         while True:
             tag, body = _read_msg(self.sock)
             if tag == b"E":
@@ -205,17 +212,20 @@ class PgWireClient:
                 (code,) = struct.unpack("!i", body[:4])
                 if code != 0:
                     raise RuntimeError(f"auth method {code} unsupported (trust only)")
+            elif tag == b"C":
+                done = body.rstrip(b"\x00").decode()
             elif tag == b"Z":
-                return
-            # 'S' ParameterStatus / 'K' BackendKeyData / 'C' / 'N': skip
+                return done
+            # 'S' ParameterStatus / 'K' BackendKeyData / 'N': skip
 
     def query(self, sql: str) -> None:
         _send_msg(self.sock, b"Q", sql.encode() + b"\x00")
         self._until_ready()
 
     def copy_rows(self, table: str, columns: list[str], rows) -> int:
-        """COPY ``rows`` into ``table`` over one CopyData stream;
-        returns the row count sent."""
+        """COPY ``rows`` into ``table`` over one CopyData stream; returns
+        the row count, after checking that the server's ``COPY n``
+        acknowledgement matches the rows sent (raises if it does not)."""
         collist = ", ".join(columns)
         _send_msg(
             self.sock, b"Q",
@@ -237,7 +247,11 @@ class PgWireClient:
         if buf:
             _send_msg(self.sock, b"d", bytes(buf))
         _send_msg(self.sock, b"c")  # CopyDone
-        self._until_ready()
+        done = self._until_ready()
+        if done != f"COPY {n}":
+            raise RuntimeError(
+                f"COPY into {table}: server acknowledged {done!r} for {n} rows sent"
+            )
         return n
 
     def close(self) -> None:
@@ -257,29 +271,65 @@ class PgCopyConfig:
     num_partitions: int = 8
 
 
-def _copy_partition(host, port, table, cols, user, database, rows) -> None:
+def _copy_partition(host, port, table, cols, user, database, rows) -> int:
     rows = list(rows)
     if not rows:
-        return  # no empty connections: mirrors JDBC's skip of empty tasks
+        return 0  # no empty connections: mirrors JDBC's skip of empty tasks
     c = PgWireClient(host, port, user=user, database=database)
     try:
         c.query("BEGIN")
-        c.copy_rows(table, cols, rows)
+        n = c.copy_rows(table, cols, rows)
         c.query("COMMIT")
     finally:
         c.close()
+    return n
 
 
-def write_postgres_copy(df: DataFrame, cfg: PgCopyConfig) -> None:
+def _arrow_rows(batches):
+    """Row tuples of Python values from Arrow record batches, as the COPY
+    text encoder takes them. Spark hands ``TimestampType`` over
+    zone-aware in the session zone; it lands as that zone's wall clock
+    with no zone suffix, the text a ``timestamp`` column parses."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    for batch in batches:
+        cols = []
+        for col in batch.columns:
+            if pa.types.is_timestamp(col.type) and col.type.tz is not None:
+                col = pc.local_timestamp(col)
+            cols.append(col.to_pylist())
+        yield from zip(*cols)
+
+
+def write_postgres_copy(df: DataFrame, cfg: PgCopyConfig) -> int:
     """Parallel COPY load: exactly ``num_partitions`` writer tasks
     (same shaping rule as the JDBC sink), each COPYing its partition
-    over its own wire connection in one transaction. Scale note: on a
-    1000-executor cluster this is N concurrent COPYs through the GP
-    master — the right default for batch loads; raising throughput
-    beyond the master's ingest ceiling is gpfdist territory, declared
-    out of scope (no cluster here)."""
+    over its own wire connection in one transaction. Returns the number
+    of rows the server acknowledged.
+
+    Every column must have a Greenplum type (:func:`gp_type`); arrays,
+    maps and structs raise ``ValueError`` before any connection opens.
+
+    The writers are ``mapInArrow`` tasks, each yielding its row count
+    to be summed here, so they run in the Python worker pool every
+    other SQL/Arrow operator shares. An RDD action (``foreachPartition``)
+    would not: Spark serves RDD tasks from a pool of their own, a
+    second daemon whose workers stay resident beside the first.
+
+    Scale note: on a 1000-executor cluster this is N concurrent COPYs
+    through the GP master — the right default for batch loads; raising
+    throughput beyond the master's ingest ceiling is gpfdist territory,
+    declared out of scope (no cluster here)."""
     from insight_gp_import_spark.sources.jdbc import JdbcSinkConfig, prepare_jdbc_write
 
+    for name, spark_type in df.dtypes:
+        try:
+            gp_type(spark_type)
+        except ValueError:
+            raise ValueError(
+                f"column {name!r} of type {spark_type!r} has no Greenplum type"
+            ) from None
     shaped = prepare_jdbc_write(
         df, JdbcSinkConfig(url="", table=cfg.table,
                            num_partitions=cfg.num_partitions)
@@ -287,9 +337,15 @@ def write_postgres_copy(df: DataFrame, cfg: PgCopyConfig) -> None:
     cols = shaped.columns
     host, port, table = cfg.host, cfg.port, cfg.table
     user, database = cfg.user, cfg.database
-    shaped.foreachPartition(
-        lambda rows: _copy_partition(host, port, table, cols, user, database, rows)
-    )
+
+    def copy_batches(batches):
+        import pyarrow as pa
+
+        n = _copy_partition(host, port, table, cols, user, database,
+                            _arrow_rows(batches))
+        yield pa.record_batch([pa.array([n], pa.int64())], names=["n"])
+
+    return sum(r.n for r in shaped.mapInArrow(copy_batches, "n long").collect())
 
 
 # ---------------------------------------------------------------------------
@@ -341,6 +397,7 @@ class PgWireStubServer:
 
     def _serve_conn(self, conn: socket.socket) -> None:
         try:
+            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
             # startup phase: length-prefixed, untagged
             (length,) = struct.unpack("!i", _recv_exact(conn, 4))
             body = _recv_exact(conn, length - 4)
@@ -373,6 +430,12 @@ class PgWireStubServer:
             except OSError:
                 pass
 
+    def _land(self, table: str, rows: list[tuple]) -> int:
+        """Record one COPY's rows; returns the count to acknowledge."""
+        with self._lock:
+            self.tables.setdefault(table, []).extend(rows)
+        return len(rows)
+
     def _handle_query(self, conn: socket.socket, sql: str) -> None:
         s = sql.strip()
         with self._lock:
@@ -403,9 +466,8 @@ class PgWireStubServer:
                 for line in data.decode().splitlines()
                 if line
             ]
-            with self._lock:
-                self.tables.setdefault(table, []).extend(rows)
-            _send_msg(conn, b"C", f"COPY {len(rows)}".encode() + b"\x00")
+            landed = self._land(table, rows)
+            _send_msg(conn, b"C", f"COPY {landed}".encode() + b"\x00")
         elif up.startswith(("BEGIN", "COMMIT", "ROLLBACK")):
             _send_msg(conn, b"C", up.split()[0].encode() + b"\x00")
         elif up.startswith(("CREATE", "DROP", "ALTER")):

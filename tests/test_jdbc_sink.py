@@ -4,6 +4,8 @@ Derby (the JDBC driver Spark ships for its Hive metastore)."""
 
 from __future__ import annotations
 
+import pytest
+
 from insight_gp_import_spark.sources import JdbcSinkConfig, prepare_jdbc_write
 from insight_gp_import_spark.tables import load_table
 
@@ -60,18 +62,23 @@ def test_prepare_multifile_source_takes_coalesce_path(spark, tmp_path):
 
 
 def test_prepare_no_rdd_materialization():
-    """prepare_jdbc_write must not touch df.rdd (plan-to-RDD conversion
-    per call; unavailable under Spark Connect)."""
+    """Neither sink touches df.rdd (plan-to-RDD conversion per call;
+    unavailable under Spark Connect), and the COPY sink runs no RDD
+    action: foreachPartition tasks start a second Python worker pool
+    beside the one the SQL/Arrow operators share."""
     import ast
     import inspect
 
     import insight_gp_import_spark.sources.jdbc as jdbc_mod
+    import insight_gp_import_spark.sources.pgwire as pgwire_mod
 
-    tree = ast.parse(inspect.getsource(jdbc_mod))
-    rdd_accesses = [
-        n for n in ast.walk(tree) if isinstance(n, ast.Attribute) and n.attr == "rdd"
-    ]
-    assert not rdd_accesses
+    for mod in (jdbc_mod, pgwire_mod):
+        tree = ast.parse(inspect.getsource(mod))
+        rdd_calls = [
+            n.attr for n in ast.walk(tree)
+            if isinstance(n, ast.Attribute) and n.attr in ("rdd", "foreachPartition")
+        ]
+        assert not rdd_calls, (mod.__name__, rdd_calls)
 
 
 def test_jdbc_round_trip_derby(spark):
@@ -248,6 +255,119 @@ def test_pgwire_copy_null_and_escapes(spark):
     assert got["6"] == "\\N literal"
 
 
+def test_pgwire_copy_text_pinned_per_type(spark):
+    """The exact landed text of each simple type the COPY sink carries.
+    Timestamps land as the session-zone wall clock with no zone suffix
+    (the form of the ``events.ts`` column), decimals keep their scale,
+    binary lands as bytea hex, and a NULL of any type lands as NULL."""
+    from insight_gp_import_spark.sources import (
+        PgCopyConfig,
+        PgWireStubServer,
+        write_postgres_copy,
+    )
+
+    df = spark.sql(r"""
+        SELECT * FROM VALUES
+          (CAST(9007199254740993 AS BIGINT), CAST(0.1 AS DOUBLE),
+           CAST(-1234.50 AS DECIMAL(12,2)), 'tab\there\nnl back\\slash',
+           true, DATE '2024-02-29', TIMESTAMP '2024-03-05 06:07:08.123456',
+           CAST(NULL AS STRING), X'00FF10'),
+          (CAST(-1 AS BIGINT), CAST(1e300 AS DOUBLE), CAST(0 AS DECIMAL(12,2)),
+           '', false, DATE '1970-01-01', TIMESTAMP '1969-12-31 23:59:59.5', 'x',
+           X''),
+          (CAST(0 AS BIGINT), CAST(-2.5 AS DOUBLE), CAST(99.99 AS DECIMAL(12,2)),
+           'a', true, DATE '2000-01-01', TIMESTAMP '2024-03-05 06:07:00', '',
+           X'5C'),
+          (NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL)
+        AS t(b, d, dec, s, flag, day, ts, n, bin)
+    """)
+    want = [
+        ("9007199254740993", "0.1", "-1234.50", "tab\there\nnl back\\slash",
+         "t", "2024-02-29", "2024-03-05 06:07:08.123456", None, "\\x00ff10"),
+        ("-1", "1e+300", "0.00", "", "f", "1970-01-01",
+         "1969-12-31 23:59:59.500000", "x", "\\x"),
+        ("0", "-2.5", "99.99", "a", "t", "2000-01-01", "2024-03-05 06:07:00", "",
+         "\\x5c"),
+        (None,) * 9,
+    ]
+    with PgWireStubServer() as srv:
+        cfg = PgCopyConfig(host=srv.host, port=srv.port,
+                           table="pinned", num_partitions=1)
+        acked = write_postgres_copy(df, cfg)
+        assert sorted(srv.tables["pinned"], key=repr) == sorted(want, key=repr)
+    assert acked == len(want)
+
+
+def test_pgwire_copy_short_ack_raises(spark):
+    """A server that acknowledges fewer rows than were sent fails the
+    write before its transaction commits."""
+    from insight_gp_import_spark.sources import (
+        PgCopyConfig,
+        PgWireStubServer,
+        write_postgres_copy,
+    )
+
+    class ShortAckStub(PgWireStubServer):
+        def _land(self, table, rows):
+            return super()._land(table, rows[:-1])  # loses a row
+
+    df = spark.range(10).selectExpr("id AS k")
+    with ShortAckStub() as srv:
+        cfg = PgCopyConfig(host=srv.host, port=srv.port,
+                           table="short", num_partitions=1)
+        with pytest.raises(Exception, match="acknowledged 'COPY 9' for 10 rows"):
+            write_postgres_copy(df, cfg)
+        # the writer raised before COMMIT: its transaction never committed
+        assert not any(s.upper().startswith("COMMIT") for s in srv.statements)
+
+
+@pytest.mark.parametrize(
+    "expr",
+    ["array(id) AS col", "map(id, id) AS col", "named_struct('a', id) AS col"],
+)
+def test_pgwire_copy_rejects_complex_columns(spark, expr):
+    """Arrays, maps and structs have no Greenplum column type: the sink
+    names the column and raises before any connection opens."""
+    from insight_gp_import_spark.sources import (
+        PgCopyConfig,
+        PgWireStubServer,
+        write_postgres_copy,
+    )
+
+    df = spark.range(3).selectExpr("id", expr)
+    with PgWireStubServer() as srv:
+        cfg = PgCopyConfig(host=srv.host, port=srv.port,
+                           table="nested", num_partitions=2)
+        with pytest.raises(ValueError, match="'col'"):
+            write_postgres_copy(df, cfg)
+        assert srv.connections == 0
+
+
+def test_pgwire_sockets_disable_nagle():
+    """Both ends of the wire set TCP_NODELAY: each COPY frame is one
+    small write followed by a wait for the reply, which Nagle's
+    algorithm holds back until the peer's delayed ACK."""
+    import socket
+
+    from insight_gp_import_spark.sources import PgWireClient, PgWireStubServer
+
+    seen = []
+
+    class RecordingStub(PgWireStubServer):
+        def _handle_query(self, conn, sql):
+            seen.append(conn.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY))
+            super()._handle_query(conn, sql)
+
+    with RecordingStub() as srv:
+        c = PgWireClient(srv.host, srv.port)
+        try:
+            assert c.sock.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY)
+            c.query("BEGIN")
+        finally:
+            c.close()
+    assert seen and all(seen)
+
+
 def test_gp_create_table_ddl(spark):
     from insight_gp_import_spark.sources import gp_create_table_ddl
 
@@ -263,8 +383,6 @@ def test_gp_create_table_ddl(spark):
 
     stage = gp_create_table_ddl(df, "orders_stage")
     assert stage.endswith("DISTRIBUTED RANDOMLY")
-
-    import pytest
 
     with pytest.raises(ValueError):
         gp_create_table_ddl(df, "t", distributed_by=("nope",))
