@@ -35,7 +35,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB twin SQL per op; rows-only ops (oracle=None) are omitted."""
-    return {
-        name: o.oracle for name, o in load_all_ops().items() if o.oracle is not None
-    }
+    """DuckDB twin SQL per op."""
+    return {name: o.oracle for name, o in load_all_ops().items()}

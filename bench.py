@@ -169,12 +169,12 @@ def main() -> None:
     head = sorted(attempts, key=lambda a: a["suite"])[len(attempts) // 2]
 
     sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
-    # r9 verdict item 4: BENCH_r09's recorded 35% "regression" was pure
-    # host load (quiet-box re-runs landed on the r8 number), so stamp
-    # the measurement conditions into the artifact: load averages and a
-    # noisy_host flag (any query with spread > 0.3x its median). When
-    # noisy_host is true, judge regressions on suite_min / the
-    # canary-normalized stats — never on the raw medians.
+    # Host load alone has faked a 35% "regression" (quiet-box re-runs
+    # matched the earlier number), so stamp the measurement conditions
+    # into the artifact: load averages and a noisy_host flag (any
+    # query with spread > 0.3x its median). When noisy_host is true,
+    # judge regressions on suite_min / the canary-normalized stats —
+    # never on the raw medians.
     try:
         load1, load5, _ = os.getloadavg()
     except (OSError, AttributeError):  # platform without getloadavg

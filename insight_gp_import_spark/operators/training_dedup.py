@@ -1422,9 +1422,9 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     # when it is SMALL the whole fixpoint loop is per-round scheduling
     # overhead on KB-scale state: ~5 rounds × (join + agg + checkpoint
     # + convergence count) to propagate labels over a few thousand
-    # nodes. Below a bounded threshold (CC_LOCAL_MAX_EDGES pairs,
-    # env-overridable, 0 disables) the edges are collected ONCE and a
-    # driver-side min-root union-find labels the components — the same
+    # nodes. Below a bounded threshold (CC_LOCAL_MAX_EDGES pairs) the
+    # edges are collected ONCE and a driver-side min-root union-find
+    # labels the components — the same
     # vocab-probe-style two-level plan choice as the mask64 branch,
     # with the same bounded-driver-state class as the PCA Gram
     # collect. Above the threshold (any genuinely large corpus) the
@@ -1438,7 +1438,7 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_pairs = sedges.count()
     if n_pairs == 0:
         labels = None
-    elif n_pairs <= _cc_local_max():
+    elif n_pairs <= CC_LOCAL_MAX_EDGES:
         labels = _cc_local_labels(spark, _collect_pairs(sedges))
     else:
         labels = _cc_loop_labels(spark, sedges)
@@ -1465,9 +1465,8 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Collect-and-union-find threshold for the CC family's set-level edge
 # relation: 1M (s1, s2) BIGINT pairs ≈ 16 MB on the driver — the same
 # bounded-collect class as broadcast build sides, far under
-# spark.driver.maxResultSize. IGIS_CC_LOCAL_MAX overrides; 0 disables
-# (forces the distributed loop — used by tests to pin branch
-# equivalence).
+# spark.driver.maxResultSize. Tests set it to 0 to force the
+# distributed loop and pin branch equivalence.
 CC_LOCAL_MAX_EDGES = 1_000_000
 
 
@@ -1485,15 +1484,6 @@ def _collect_pairs(sedges: DataFrame):
         )
     except Exception:
         return sedges.collect()
-
-
-def _cc_local_max() -> int:
-    import os
-
-    try:
-        return int(os.environ.get("IGIS_CC_LOCAL_MAX", ""))
-    except ValueError:
-        return CC_LOCAL_MAX_EDGES
 
 
 def _cc_local_labels(spark: SparkSession, pairs) -> DataFrame:

@@ -4,9 +4,6 @@ Every operator from SURVEY.md §2 is registered here by its ``op id``.
 ``__spark_entry__.queries()`` / ``oracle_sql()`` are thin views over this
 registry, so an operator is implemented, tested, and declared in exactly
 one place.
-
-An op with ``oracle=None`` is declared rows-only (non-SQL-expressible:
-tolerant scans, sinks, approx sketches).
 """
 
 from __future__ import annotations
@@ -23,7 +20,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class Op:
     name: str
     fn: QueryFn
-    oracle: str | None
+    oracle: str
     category: str
 
 
@@ -70,8 +67,8 @@ def flush_tracked_persists() -> None:
             pass
 
 
-def op(name: str, oracle: str | None = None, category: str = "") -> Callable[[QueryFn], QueryFn]:
-    """Register an operator. ``oracle`` is the DuckDB twin SQL (or None)."""
+def op(name: str, oracle: str, category: str = "") -> Callable[[QueryFn], QueryFn]:
+    """Register an operator. ``oracle`` is its DuckDB twin SQL."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:

@@ -209,12 +209,7 @@ def estimate_splits_from_files(
 def _undersplit_target(df: DataFrame) -> int | None:
     """defaultParallelism when ``df``'s scan is under-split (estimated
     splits × 2 ≤ parallelism — the ×2 hysteresis keeps borderline
-    layouts unchanged), else None. ``IGIS_SPREAD_SCAN=0`` is a
-    deployment kill-switch (r12 ADVICE)."""
-    import os
-
-    if os.environ.get("IGIS_SPREAD_SCAN") == "0":
-        return None
+    layouts unchanged), else None."""
     est = _estimated_scan_splits(df)
     if est is None:
         return None

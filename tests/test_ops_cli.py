@@ -1,0 +1,47 @@
+"""tools/ops.py end to end, one cold CLI run per Spark-using case."""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SF = "/root/testdata/sf0.01"
+
+
+def _ops_cli(*args: str, env: dict | None = None) -> subprocess.CompletedProcess:
+    return subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "ops.py"), *args],
+        capture_output=True, text=True, timeout=600, cwd=REPO, env=env,
+    )
+
+
+def test_check_passes():
+    p = _ops_cli("check", "agg_hash_groupby", "--sf", SF)
+    assert p.returncode == 0, p.stderr[-2000:]
+    rows = [json.loads(ln) for ln in p.stdout.splitlines() if ln.startswith("{")]
+    assert [(r["op"], r["sf"], r["status"]) for r in rows] == [
+        ("agg_hash_groupby", "sf0.01", "PASS")
+    ]
+
+
+def test_check_unknown_op_starts_no_jvm():
+    # With no java to launch, any attempt to start Spark would fail with
+    # a gateway error before the op-name check could report.
+    p = _ops_cli("check", "no_such_op", env=os.environ | {"JAVA_HOME": "/nonexistent"})
+    assert p.returncode != 0
+    assert "unknown op(s): no_such_op" in p.stderr
+    assert "JAVA_GATEWAY" not in p.stderr + p.stdout
+
+
+def test_profile_prints_one_json_line():
+    p = _ops_cli("profile", "--ops", "agg_hash_groupby", "--sf", SF)
+    assert p.returncode == 0, p.stderr[-2000:]
+    lines = p.stdout.splitlines()
+    assert len(lines) == 1, p.stdout
+    rec = json.loads(lines[0])
+    assert rec["op"] == "agg_hash_groupby"
+    assert rec["noop_sec"] > 0
+    assert rec["plan"]["Exchange"] >= 1

@@ -332,7 +332,7 @@ def test_dedup_plan_exchange_count(spark, name, exchanges):
     candidate-generation work is judged against these shapes. Counts the
     numbered node headers ("(7) Exchange"), one per node, so neither
     BroadcastExchange nor prose mentions count, as
-    tools/profile_ops.plan_stats does."""
+    tools/ops.py's plan_stats does."""
     import re
 
     plan = plan_of(spark, name)

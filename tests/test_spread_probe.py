@@ -61,9 +61,3 @@ def test_few_large_files_is_noop(mpb):
     assert spread_scan(df) is df
     assert spread_scan_by(df, "l_orderkey") is df
 
-
-def test_kill_switch(spark, monkeypatch):
-    monkeypatch.setenv("IGIS_SPREAD_SCAN", "0")
-    df = load_table(spark, SF10, "documents")
-    assert spread_scan(df) is df
-    assert spread_scan_by(df, "doc_id") is df

@@ -463,14 +463,14 @@ def test_sweep_spine_tier_matches_oracle(spark, monkeypatch):
 def test_dedup_cluster_local_vs_distributed_cc(spark, monkeypatch):
     """r13: dedup_cluster's bounded-collect union-find branch (fires at
     every test SF) and the distributed min-label fixpoint
-    (IGIS_CC_LOCAL_MAX=0 forces it) must produce the IDENTICAL
+    (CC_LOCAL_MAX_EDGES=0 forces it) must produce the IDENTICAL
     (doc_id, cluster_id, is_survivor) relation — the CC engine is a
     plan choice, never a result change."""
     rel_local = {
         (r.doc_id, r.cluster_id, r.is_survivor)
         for r in OPS["dedup_cluster"].fn(spark, SF).collect()
     }
-    monkeypatch.setenv("IGIS_CC_LOCAL_MAX", "0")
+    monkeypatch.setattr(td, "CC_LOCAL_MAX_EDGES", 0)
     rel_loop = {
         (r.doc_id, r.cluster_id, r.is_survivor)
         for r in OPS["dedup_cluster"].fn(spark, SF).collect()

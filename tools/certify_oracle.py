@@ -66,17 +66,13 @@ def run_oracle(oracle: str, sf_dir: str) -> dict:
         # hard-coded 60GB OOM-kills smaller machines instead of letting
         # DuckDB spill). ~75% of physical RAM mirrors DuckDB's own
         # default proportion while leaving headroom for the Python
-        # process; IGIS_CERT_DUCKDB_MEM still overrides.
-        mem = os.environ.get("IGIS_CERT_DUCKDB_MEM")
-        if not mem:
-            try:
-                ram_gb = (os.sysconf("SC_PAGE_SIZE")
-                          * os.sysconf("SC_PHYS_PAGES")) / 2**30
-                mem = f"{max(1, int(ram_gb * 0.75))}GB"
-            except (ValueError, OSError, AttributeError):
-                mem = None  # keep DuckDB's own default
-        if mem:
-            con.execute(f"SET memory_limit='{mem}'")
+        # process.
+        try:
+            ram_gb = (os.sysconf("SC_PAGE_SIZE")
+                      * os.sysconf("SC_PHYS_PAGES")) / 2**30
+            con.execute(f"SET memory_limit='{max(1, int(ram_gb * 0.75))}GB'")
+        except (ValueError, OSError, AttributeError):
+            pass  # keep DuckDB's own default
         con.execute("SET preserve_insertion_order=false")
         d_types = declared_types(con, oracle)
         cur = con.execute(oracle)

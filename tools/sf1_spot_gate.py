@@ -10,12 +10,11 @@ compare (insight_gp_import_spark.compare.compare — the same
 schema/type/value protocol the driver hashes) for the ~15 heaviest ops
 at /tmp/igis_sf1 (built by tools/make_sf_scale.py).
 
-Each op runs in its OWN subprocess with a per-op timeout: a DuckDB
-oracle that is itself quadratic (dedup_cluster's recursive CTE was
-~1 h at sf0.1 already) gets recorded as ORACLE_TIMEOUT with the bound
-stated, not silently skipped — the Spark side still runs and its
-row count is recorded, so a Spark-side crash at 10× cannot hide
-behind an oracle timeout.
+Each op runs in its OWN subprocess (``tools/ops.py check``) with a
+per-op timeout: an op whose DuckDB oracle is itself quadratic
+(dedup_cluster's recursive CTE was ~1 h at sf0.1 already) gets a
+TIMEOUT row, not a silent skip. Before an op in ``ops.py``'s isolation
+set, the gate waits for other Spark JVMs to exit.
 
 Usage: python tools/sf1_spot_gate.py [sf10_dir] [--timeout SECS]
 Emits one JSONL row per op and a final summary line.
@@ -30,7 +29,12 @@ import subprocess
 import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# tools/ is the script's dir; importing ops also puts the repo on sys.path
+from ops import isolated
+
+from insight_gp_import_spark.registry import load_all_ops
+
+OPS_CLI = os.path.join(os.path.dirname(os.path.abspath(__file__)), "ops.py")
 
 HEAVY_OPS = [
     # dedup family — banding/bitmap/spine machinery under 10× load
@@ -52,41 +56,6 @@ HEAVY_OPS = [
     "stream_session",
     "fn_math",
 ]
-
-_WORKER = r"""
-import os, sys, time, json
-sys.path.insert(0, __REPO__)
-from insight_gp_import_spark.session import get_session
-from insight_gp_import_spark.registry import load_all_ops
-from insight_gp_import_spark.compare import compare
-
-name, sf = sys.argv[1], sys.argv[2]
-ops = load_all_ops()
-spark = get_session(app_name="sf1-gate-" + name)
-spark.sparkContext.setLogLevel("ERROR")
-t0 = time.perf_counter()
-df = ops[name].fn(spark, sf)
-if ops[name].oracle is None:
-    n = df.count()
-    print(json.dumps({"op": name, "status": "rows_only", "n": n,
-                      "secs": round(time.perf_counter() - t0, 1)}))
-else:
-    res = compare(name, df, ops[name].oracle, sf)
-    print(json.dumps({"op": name, "status": "ok" if res.ok else "FAIL",
-                      "detail": None if res.ok else res.detail[:300],
-                      "secs": round(time.perf_counter() - t0, 1)}))
-# r11: dedup_phash_hamming produced an ERROR row whose direct re-run
-# was hash-green — the JSON had been printed but the worker's exit
-# code was nonzero (py4j/JVM shutdown race). Flush and stop the
-# session explicitly, then exit 0 on the success path so the parent
-# judges the JSON line, not the interpreter teardown.
-sys.stdout.flush()
-try:
-    spark.stop()
-except Exception:
-    pass
-os._exit(0)
-"""
 
 
 def _live_spark_jvms() -> int:
@@ -110,11 +79,6 @@ def _live_spark_jvms() -> int:
     return n
 
 
-# ops whose Python-worker/Arrow plans are the concurrent-session flake
-# class (mirrors tools/parity_sweep.py's isolation phase)
-FLAKE_CLASS = {"dedup_phash_hamming"}
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("sf10", nargs="?", default="/tmp/igis_sf1")
@@ -122,12 +86,17 @@ def main() -> None:
     ap.add_argument("--ops", nargs="*", default=None)
     ap.add_argument("--quiet-wait", type=int, default=600,
                     help="max secs to wait for other Spark JVMs to exit "
-                         "before a flake-class op")
+                         "before an isolated op")
     args = ap.parse_args()
 
+    ops = load_all_ops()
+    names = args.ops or HEAVY_OPS
+    unknown = [n for n in names if n not in ops]
+    if unknown:
+        ap.error(f"unknown op(s): {', '.join(unknown)}")
     results = []
-    for name in args.ops or HEAVY_OPS:
-        if name in FLAKE_CLASS or name.startswith("mm_"):
+    for name in names:
+        if isolated(ops[name]):
             waited = 0
             while _live_spark_jvms() and waited < args.quiet_wait:
                 time.sleep(10)
@@ -136,9 +105,7 @@ def main() -> None:
         t0 = time.perf_counter()
         try:
             proc = subprocess.run(
-                [sys.executable, "-c",
-                 _WORKER.replace("__REPO__", repr(REPO)),
-                 name, args.sf10],
+                [sys.executable, OPS_CLI, "check", name, "--sf", args.sf10],
                 capture_output=True, text=True, timeout=args.timeout,
             )
             # r11: the row may not start its line — DuckDB's live-
@@ -152,8 +119,11 @@ def main() -> None:
                 i = ln.find('{"op":')
                 if i >= 0:
                     out.append(ln[i:])
+            # Judge the JSON row, not the exit code: a FAIL row exits
+            # non-zero, and so can a clean run on a py4j/JVM shutdown
+            # race.
             row = None
-            if proc.returncode == 0 and out:
+            if out:
                 # The marker heuristic can slice trailing garbage (the
                 # same stdout-interleaving class it works around) or
                 # match '{"op":' inside non-JSON text; a decode error
@@ -174,11 +144,9 @@ def main() -> None:
         results.append(row)
         print(json.dumps(row), flush=True)
 
-    ok = sum(1 for r in results if r["status"] in ("ok", "rows_only"))
-    print(json.dumps({"summary": {"ok": ok, "total": len(results),
-                                  "bad": [r for r in results
-                                          if r["status"] not in
-                                          ("ok", "rows_only")]}}),
+    bad = [r for r in results if r["status"] != "PASS"]
+    print(json.dumps({"summary": {"ok": len(results) - len(bad),
+                                  "total": len(results), "bad": bad}}),
           flush=True)
 
 
