@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from insight_gp_import_spark.registry import op, tracked_persist
-from insight_gp_import_spark.tables import load_table, spread_scan_by
+from insight_gp_import_spark.tables import load_table, spread_scan
 
 CAT = "graph"
 
@@ -53,7 +53,7 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # groupBy's own exchange 1:1 and widens the set build + pair
     # expansion (1.8 s → 1.0 s at sf0.1; no-op at production splits,
     # where map-side partial collect_set keeps its value).
-    li = spread_scan_by(li, "l_orderkey")
+    li = spread_scan(li, "l_orderkey")
     sets = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("ps")
     )

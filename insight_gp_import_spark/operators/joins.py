@@ -17,11 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from insight_gp_import_spark.registry import op, tracked_persist
-from insight_gp_import_spark.tables import (
-    load_table,
-    spread_scan,
-    spread_scan_by,
-)
+from insight_gp_import_spark.tables import load_table, spread_scan
 
 CAT = "joins"
 
@@ -587,7 +583,7 @@ def join_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     # r12b: keyed spread — see graph_ops._copurchase_pairs (same
     # shape, same 1:1 exchange replacement; no-op at production).
-    li = spread_scan_by(li, "l_orderkey")
+    li = spread_scan(li, "l_orderkey")
     sets = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("ps")
     )

@@ -28,18 +28,12 @@ import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-try:  # classic (py4j) runtime; absent under Spark Connect
-    from py4j.protocol import Py4JJavaError
-except ImportError:  # pragma: no cover
-    Py4JJavaError = AnalysisException
-
 from insight_gp_import_spark.registry import op
-from insight_gp_import_spark.tables import load_table
+from insight_gp_import_spark.tables import load_table, spread_scan
 
 CAT = "multimodal"
 
@@ -857,54 +851,6 @@ def mm_modality_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _spread_for_python(df: DataFrame, spark: SparkSession) -> DataFrame:
-    """Widen input parallelism for python-codec-heavy map stages, but
-    ONLY when the source is under-split (round-7 measurement: the 10x
-    stress corpus is ONE parquet row group, so a 50k-doc FLAC
-    round-trip ran on a single core — 212 s; repartition(32) took it
-    to 24.7 s). Parquet parallelizes at row-group granularity, so
-    maxPartitionBytes cannot split a single-row-group file — the same
-    one-giant-unsplittable-file regime scan_csv_tolerant documents for
-    .gz staging. At 100 TB inputs are many files/row groups and this
-    helper is a NO-OP (the condition fails), so no shuffle is added on
-    the path where a shuffle would hurt; the repartition payload here
-    is ids + small int arrays, never raw text.
-
-    Under-split detection uses ``df.inputFiles()`` (r8 ADVICE fix):
-    the old ``df.rdd.getNumPartitions()`` forced a full plan-to-RDD
-    conversion per op invocation and is unavailable under Spark
-    Connect. r13 (VERDICT item 1, shared with tables.spread_scan):
-    file count alone only LOWER-bounds split count, so a few-large-
-    files production layout is additionally ruled out by the
-    byte-bounded estimate Σ ceil(size / maxPartitionBytes) over the
-    same listing (tables.estimate_splits_from_files) — a compacted
-    multi-GB-file table can never be round-robin-shuffled by this
-    helper.
-
-    A NON-file batch source (createDataFrame fixtures) reports zero
-    input files and is widened too — local-collection parallelism is
-    unknowable without a plan-to-RDD probe, and an extra round-robin
-    exchange of id-sized rows is cheaper than a single-core codec
-    stage (the exact regime this helper exists for). Only a plan
-    where ``inputFiles()`` itself fails — streaming relations and
-    other unsupported-plan analysis errors — is left untouched, and
-    only those error types are caught (r9: the old bare
-    ``except Exception`` could mask unrelated analysis bugs)."""
-    from insight_gp_import_spark.tables import estimate_splits_from_files
-
-    want = spark.sparkContext.defaultParallelism
-    try:
-        files = df.inputFiles()
-    except (AnalysisException, Py4JJavaError):
-        # inputFiles() unsupported for this plan (e.g. streaming):
-        # nothing to detect, leave the plan untouched.
-        return df
-    est = estimate_splits_from_files(spark, files)
-    if est is not None and est < want:
-        return df.repartition(want)
-    return df
-
-
 @op(
     "mm_image_meta_real",
     oracle="""
@@ -1042,7 +988,7 @@ def mm_image_meta_real(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    return _spread_for_python(staged, spark).mapInPandas(
+    return spread_scan(staged).mapInPandas(
         meta_batches,
         "doc_id long, fmt string, width long, height long, "
         "pixel_sum long, px_first long, px_last long, exact long",
@@ -1155,7 +1101,7 @@ def mm_audio_meta_real(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    return _spread_for_python(staged, spark).mapInPandas(
+    return spread_scan(staged).mapInPandas(
         meta_batches,
         "doc_id long, n_frames long, channels long, sample_rate long, "
         "amp_sum long, amp_first long, amp_last long, exact long",
@@ -1356,7 +1302,7 @@ def mm_audio_flac_real(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    return _spread_for_python(staged, spark).mapInPandas(
+    return spread_scan(staged).mapInPandas(
         meta_batches,
         "doc_id long, n_frames long, channels long, sample_rate long, "
         "amp_sum long, amp_first long, amp_last long, exact long",
@@ -1433,7 +1379,7 @@ def mm_image_jpeg_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to mm_image_meta_real — one fused JVM scan
     expression for the byte sampling, then a zero-shuffle Arrow
     mapInPandas per-row map; parallelizes with input partitions at
-    100 TB (``_spread_for_python`` only widens under-split local
+    100 TB (``spread_scan`` only widens under-split local
     fixtures).
     """
     docs = load_table(spark, sf_dir, "documents")
@@ -1519,7 +1465,7 @@ def mm_image_jpeg_real(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    return _spread_for_python(staged, spark).mapInPandas(
+    return spread_scan(staged).mapInPandas(
         jpeg_batches,
         "doc_id long, quality long, width long, height long, "
         "pixel_sum long, px_first long, px_last long, exact long, "

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from insight_gp_import_spark.registry import op
-from insight_gp_import_spark.tables import load_table
+from insight_gp_import_spark.tables import load_table, shuffle_width
 
 CAT = "streaming"
 
@@ -188,16 +188,10 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     # columns, and the session merge runs complete per partition
     # (measured 0.77 s → 0.59 s at sf0.1). Partition count = the
     # session's shuffle setting — exactly what the removed exchange
-    # would have used at any scale. (r12 ADVICE: a non-numeric
-    # platform value like "auto" falls back to defaultParallelism;
-    # and note sum(value) accumulates doubles in per-partition order
-    # either way — round(...,4) absorbs FP reorder exactly as the
-    # other double-sum ops document.)
-    try:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (ValueError, TypeError):
-        n_parts = spark.sparkContext.defaultParallelism
-    ev = ev.repartition(n_parts, "user_id")
+    # would have used at any scale. sum(value) accumulates doubles in
+    # per-partition order either way — round(...,4) absorbs FP reorder
+    # exactly as the other double-sum ops document.
+    ev = ev.repartition(shuffle_width(spark), "user_id")
     return (
         ev.groupBy(F.session_window("ts", "10 minutes"), "user_id")
         .agg(

@@ -36,7 +36,7 @@ from insight_gp_import_spark.operators.llm import (
     char_trigram_zip_expr,
 )
 from insight_gp_import_spark.registry import op, tracked_persist
-from insight_gp_import_spark.tables import load_table, spread_scan
+from insight_gp_import_spark.tables import load_table, shuffle_width, spread_scan
 
 CAT = "training-dedup"
 
@@ -1522,14 +1522,10 @@ def _cc_local_labels(spark: SparkSession, pairs) -> DataFrame:
 def _cc_loop_labels(spark: SparkSession, sedges: DataFrame) -> DataFrame:
     """Distributed min-label fixpoint over the (persisted) set-level
     pair relation — the above-threshold path of dedup_cluster."""
-    try:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (ValueError, TypeError):
-        n_parts = spark.sparkContext.defaultParallelism
     edges = tracked_persist(
         sedges.union(sedges.select("s2", "s1"))
         .toDF("src", "dst")
-        .repartition(n_parts, "src")
+        .repartition(shuffle_width(spark), "src")
         .sortWithinPartitions("src")
     )
     nodes = edges.select(F.col("src").alias("node")).distinct()

@@ -28,7 +28,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from insight_gp_import_spark.registry import op
-from insight_gp_import_spark.tables import load_table
+from insight_gp_import_spark.tables import _keyed_width, load_table
 
 CAT = "udfs"
 
@@ -330,20 +330,14 @@ def udf_pandas_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
     )
-    # r12 (guide §4): the per-frame Python hop is the whole cost of
-    # this op and its parallelism equals the window's partition count.
-    # Hash-repartition by the window key to AT LEAST the session's
-    # core count — the window reuses this partitioning (same number of
-    # Exchanges; measured 5.5 s → 0.8 s at sf0.1 with shuffle=8 on
-    # local[32]). Scale-adaptive: on a cluster shuffle.partitions
-    # already exceeds core count and the max() changes nothing.
-    # (r12 ADVICE: tolerate a non-numeric platform value like "auto".)
-    try:
-        shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (ValueError, TypeError):
-        shuffle = spark.sparkContext.defaultParallelism
-    n_parts = max(spark.sparkContext.defaultParallelism, shuffle)
-    ev = ev.repartition(n_parts, "user_id")
+    # The per-frame Python hop is the whole cost of this op and its
+    # parallelism equals the window's partition count. Hash-repartition
+    # by the window key to at least the session's core count — the
+    # window reuses this partitioning (same number of Exchanges;
+    # measured 5.5 s → 0.8 s at sf0.1 with shuffle=8 on local[32]). On
+    # a cluster shuffle.partitions already exceeds the core count and
+    # the width is the shuffle width.
+    ev = ev.repartition(_keyed_width(spark), "user_id")
 
     @F.pandas_udf("long")
     def frame_sum(v: pd.Series) -> int:

@@ -2,7 +2,6 @@
 
 from insight_gp_import_spark.sources.jdbc import (  # noqa: F401
     JdbcSinkConfig,
-    prepare_jdbc_write,
     read_jdbc_partitioned,
     write_jdbc,
     write_jdbc_atomic,

@@ -24,6 +24,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
+from insight_gp_import_spark.tables import shape_writers
+
 DEFAULT_BATCH_SIZE = 10_000
 
 
@@ -46,40 +48,9 @@ class JdbcSinkConfig:
         return props
 
 
-def prepare_jdbc_write(df: DataFrame, cfg: JdbcSinkConfig) -> DataFrame:
-    """Shape a DataFrame for the JDBC sink: exactly ``num_partitions``
-    writer tasks (= concurrent connections).
-
-    Partition-count detection uses ``df.inputFiles()`` — the same
-    Connect-safe probe as multimodal._spread_for_python (r8 ADVICE
-    fix); the old ``df.rdd.getNumPartitions()`` forced a plan-to-RDD
-    materialization per call and is unavailable under Spark Connect.
-    File count is a conservative lower bound on scan splits, so:
-
-    - ``n_files >= num_partitions``: the scan provably has enough
-      splits that ``coalesce`` narrows to exactly ``num_partitions``
-      without a shuffle.
-    - otherwise (few files, or a non-file source where the probe
-      raises): round-robin ``repartition`` — one shuffle of the batch
-      being loaded, in exchange for exactly ``num_partitions``
-      EVENLY-SIZED writer partitions. For a parallel DB load that is
-      the preferable default anyway: a skewed coalesce partition
-      serializes the tail of the load on one connection, while the
-      DB-side INSERT throughput dwarfs one round-robin exchange of
-      the batch."""
-    want = cfg.num_partitions
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:  # non-file source: no split count to probe
-        n_files = 0
-    if n_files >= want > 0:
-        return df.coalesce(want)
-    return df.repartition(want)
-
-
 def write_jdbc(df: DataFrame, cfg: JdbcSinkConfig) -> None:
     """Execute the batched parallel JDBC write (requires a reachable DB)."""
-    shaped = prepare_jdbc_write(df, cfg)
+    shaped = shape_writers(df, cfg.num_partitions)
     (
         shaped.write.mode(cfg.mode).jdbc(
             url=cfg.url, table=cfg.table, properties=cfg.jdbc_properties()

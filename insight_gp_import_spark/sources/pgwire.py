@@ -40,6 +40,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
+from insight_gp_import_spark.tables import shape_writers
+
 _PROTO_V3 = 196608  # 3.0
 _SSL_REQUEST = 80877103
 _GSSENC_REQUEST = 80877104
@@ -321,8 +323,6 @@ def write_postgres_copy(df: DataFrame, cfg: PgCopyConfig) -> int:
     through the GP master — the right default for batch loads; raising
     throughput beyond the master's ingest ceiling is gpfdist territory,
     declared out of scope (no cluster here)."""
-    from insight_gp_import_spark.sources.jdbc import JdbcSinkConfig, prepare_jdbc_write
-
     for name, spark_type in df.dtypes:
         try:
             gp_type(spark_type)
@@ -330,10 +330,7 @@ def write_postgres_copy(df: DataFrame, cfg: PgCopyConfig) -> int:
             raise ValueError(
                 f"column {name!r} of type {spark_type!r} has no Greenplum type"
             ) from None
-    shaped = prepare_jdbc_write(
-        df, JdbcSinkConfig(url="", table=cfg.table,
-                           num_partitions=cfg.num_partitions)
-    )
+    shaped = shape_writers(df, cfg.num_partitions)
     cols = shaped.columns
     host, port, table = cfg.host, cfg.port, cfg.table
     user, database = cfg.user, cfg.database

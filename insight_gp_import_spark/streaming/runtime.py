@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from insight_gp_import_spark.tables import shuffle_width
+
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
@@ -69,13 +71,7 @@ def scaled_state_partitions(spark: SparkSession) -> Iterator[None]:
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     n = max(8, spark.sparkContext.defaultParallelism)
-    try:
-        old_n = int(old)
-    except (ValueError, TypeError):
-        # non-numeric platform value (e.g. "auto"): treat as "above the
-        # cap" so the stateful query still gets a bounded state count
-        old_n = n + 1
-    if old_n <= n:
+    if shuffle_width(spark) <= n:
         yield
         return
     spark.conf.set(key, str(n))

@@ -14,12 +14,18 @@ truncation (integer div, never ``/``: see load_events).
 At 100 TB these loaders are where partition discovery and predicate
 pushdown happen: we always go through ``spark.read.parquet`` (vectorized
 reader, row-group pruning) and never infer schemas in oracled queries.
+
+This module also makes every partition-count decision of the package:
+:func:`spread_scan` widens an under-split scan, :func:`shape_writers`
+sizes a database load, and :func:`shuffle_width` reads the session's
+shuffle width.
 """
 
 from __future__ import annotations
 
 import weakref
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -136,137 +142,99 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def _max_partition_bytes(spark: SparkSession) -> int:
-    """``spark.sql.files.maxPartitionBytes`` in bytes (handles both a
-    plain number and a size string like "128m"/"1g")."""
-    raw = str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
-    try:
-        return int(raw)
-    except ValueError:
-        pass
-    try:
-        return int(
-            spark.sparkContext._jvm.org.apache.spark.network.util
-            .JavaUtils.byteStringAsBytes(raw)
-        )
-    except Exception:
-        return 128 * 1024 * 1024
+def _scan_splits(df: DataFrame) -> int | None:
+    """Lower bound on the scan-split count of ``df``'s input, or None
+    for a streaming plan (``inputFiles()`` raises AnalysisException
+    there) — callers leave such a plan as it is.
 
-
-def _estimated_scan_splits(df: DataFrame) -> int | None:
-    """Estimated scan-split count for ``df``'s input, or None when the
-    probe cannot answer (streaming relations, un-stat-able files) —
-    callers must treat None as "well split" so the only error mode is a
-    MISSED spread, never an added shuffle of a large table.
-
-    r13 (VERDICT item 1): file COUNT alone lower-bounds split count —
-    a 100 TB table compacted into a few multi-GB files passes a
-    count-only gate and would eat a pointless full round-robin exchange
-    at production scale. So when the file count alone cannot rule the
-    layout under-split, the same (cached) listing's BYTES bound the
-    split count from below too: Spark packs scan splits at
-    ``maxPartitionBytes`` granularity, so a file of S bytes yields at
-    least ceil(S / maxPartitionBytes) splits. (Parquet row-group
-    granularity can make REAL tasks fewer than the byte estimate — a
-    single-row-group 2 GB file is one effective task — but that errs
-    toward returning the plan unchanged, the safe direction.)
-    ``openCostInBytes`` packing of many tiny files is ignored: it only
-    matters past the file-count gate, where the answer is already
-    decided."""
+    The file count alone lower-bounds splits, so it is returned without
+    statting once it rules the layout well split. Below that, the
+    listing's bytes bound the count too: Spark packs scan splits at
+    ``maxPartitionBytes``, so a file of S bytes yields at least
+    ceil(S / maxPartitionBytes) splits, and a table compacted into a
+    few multi-GB files is never mistaken for an under-split one.
+    Parquet splits at row-group granularity, so a single-row-group file
+    can run as fewer tasks than this estimate; that errs toward leaving
+    the plan unchanged. A non-file source (``createDataFrame``) lists
+    no files and estimates 0."""
     try:
         files = df.inputFiles()
-    except Exception:
+    except AnalysisException:
         return None
-    return estimate_splits_from_files(df.sparkSession, files)
-
-
-def estimate_splits_from_files(
-    spark: SparkSession, files: list[str]
-) -> int | None:
-    """Byte-bounded split estimate for a known input-file list (the
-    core of :func:`_estimated_scan_splits`; shared with
-    operators/multimodal._spread_for_python). Returns the bare file
-    count without statting when that alone already rules the layout
-    well split (count lower-bounds splits)."""
-    sc = spark.sparkContext
-    target = sc.defaultParallelism
-    if len(files) * 2 > target:
-        return len(files)
-    max_bytes = _max_partition_bytes(spark)
-    try:
-        jvm = sc._jvm
-        hconf = sc._jsc.hadoopConfiguration()
-        est = 0
-        for f in files:
-            p = jvm.org.apache.hadoop.fs.Path(f)
-            size = p.getFileSystem(hconf).getFileStatus(p).getLen()
-            est += max(1, -(-int(size) // max_bytes))
-        return est
-    except Exception:
-        return None
-
-
-def _undersplit_target(df: DataFrame) -> int | None:
-    """defaultParallelism when ``df``'s scan is under-split (estimated
-    splits × 2 ≤ parallelism — the ×2 hysteresis keeps borderline
-    layouts unchanged), else None."""
-    est = _estimated_scan_splits(df)
-    if est is None:
-        return None
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if est * 2 <= target:
-        return target
-    return None
-
-
-def spread_scan(df: DataFrame) -> DataFrame:
-    """Fan a narrow-split relation out to session parallelism before
-    heavy per-row work (optimization guide §2.5, "input skew": one
-    unsplittable file serializes every downstream JVM/Python operation
-    until the first exchange — the sf corpora are single-row-group
-    parquet files, so every scan is exactly one task regardless of
-    core count).
-
-    Scale-adaptive, never a local[32] constant: the probe estimates the
-    scan's split count from the plan's input-file listing — file count
-    when that alone proves the layout well split, plus a byte-based
-    bound (Σ ceil(size / maxPartitionBytes), r13 — see
-    :func:`_estimated_scan_splits`) so a few-large-files production
-    layout can never be mistaken for an under-split one. When the
-    source already provides at least half the session's default
-    parallelism in estimated splits — always true at production scale —
-    the plan is returned unchanged and no shuffle is added. The keyless
-    round-robin repartition is retry-deterministic (Spark sorts before
-    repartition, SPARK-23207). Apply ONLY where per-row work dominates
-    the scan (gram explodes, codec decodes, JSON parsing, similarity
-    kernels): for cheap scan+aggregate plans the added exchange costs
-    more than the single-task map side. Plans where ``inputFiles()``
-    itself fails (streaming relations) are left untouched."""
-    target = _undersplit_target(df)
-    if target is not None:
-        return df.repartition(target)
-    return df
-
-
-def spread_scan_by(df: DataFrame, *cols: str) -> DataFrame:
-    """Keyed variant of :func:`spread_scan`: when the source is
-    under-split, hash-repartition by ``cols`` to
-    max(defaultParallelism, shuffle.partitions) so that a following
-    groupBy/window on the same keys REUSES the exchange (same shuffle
-    count, wider reduce side, and the single-task map stage
-    disappears). Gated on the same split-estimate probe (byte-bounded,
-    r13): at production split counts this is a no-op, preserving
-    map-side partial aggregation where it actually combines."""
     spark = df.sparkSession
-    if _undersplit_target(df) is None:
-        return df
     sc = spark.sparkContext
-    try:
-        shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (ValueError, TypeError):
-        shuffle = sc.defaultParallelism
-    target = max(sc.defaultParallelism, shuffle)
-    return df.repartition(target, *cols)
+    if len(files) * 2 > sc.defaultParallelism:
+        return len(files)
+    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    hconf = sc._jsc.hadoopConfiguration()
+    est = 0
+    for f in files:
+        p = sc._jvm.org.apache.hadoop.fs.Path(f)
+        size = p.getFileSystem(hconf).getFileStatus(p).getLen()
+        est += max(1, -(-size // max_bytes))
+    return est
+
+
+def shuffle_width(spark: SparkSession) -> int:
+    """``spark.sql.shuffle.partitions`` as an int (Spark rejects a
+    non-numeric value when it is set)."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def _keyed_width(spark: SparkSession) -> int:
+    """Width of a keyed repartition that a following groupBy/window on
+    the same keys reuses: at least one partition per core, and never
+    narrower than the exchange it replaces."""
+    return max(spark.sparkContext.defaultParallelism, shuffle_width(spark))
+
+
+def spread_scan(df: DataFrame, *cols: str) -> DataFrame:
+    """Fan an under-split scan out to the session's cores before heavy
+    per-row work (gram explodes, codec decodes, JSON parsing,
+    similarity kernels). The corpus files are single-row-group parquet,
+    so every scan is one task whatever the core count, and that task
+    serializes all work up to the first exchange.
+
+    The scan counts as under-split when its estimated splits
+    (:func:`_scan_splits`) times 2 are at most ``defaultParallelism``;
+    the ×2 hysteresis leaves borderline layouts unchanged. Otherwise —
+    always at production scale — and for streaming plans, ``df`` is
+    returned as it is and no shuffle is added.
+
+    With no ``cols`` the widen is a round-robin
+    ``repartition(defaultParallelism)`` (retry-deterministic: Spark
+    sorts before a round-robin repartition, SPARK-23207). With ``cols``
+    it hash-partitions on them to :func:`_keyed_width`, so a following
+    groupBy/window on the same keys reuses the exchange: same shuffle
+    count, wider reduce side, and no single-task map stage. Apply only
+    where per-row work dominates the scan; for a cheap scan+aggregate
+    the added exchange costs more than the single-task map side.
+
+    A non-file source (``createDataFrame``) estimates 0 splits and is
+    widened: its parallelism is unknowable without a plan-to-RDD
+    conversion, and one exchange of id-sized rows is cheaper than a
+    single-core codec stage."""
+    est = _scan_splits(df)
+    spark = df.sparkSession
+    dp = spark.sparkContext.defaultParallelism
+    if est is None or est * 2 > dp:
+        return df
+    if cols:
+        return df.repartition(_keyed_width(spark), *cols)
+    return df.repartition(dp)
+
+
+def shape_writers(df: DataFrame, n: int) -> DataFrame:
+    """Exactly ``n`` writer tasks for a parallel database load (one
+    connection each). The file count lower-bounds scan splits, so with
+    at least ``n`` files ``coalesce(n)`` narrows without a shuffle.
+    Otherwise (few files, or a non-file source that lists none) a
+    round-robin ``repartition(n)`` costs one exchange of the batch and
+    gives ``n`` evenly sized writers: a skewed coalesced partition
+    would serialize the tail of the load on one connection."""
+    if len(df.inputFiles()) >= n:
+        return df.coalesce(n)
+    return df.repartition(n)
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -6,8 +6,8 @@ from __future__ import annotations
 
 import pytest
 
-from insight_gp_import_spark.sources import JdbcSinkConfig, prepare_jdbc_write
-from insight_gp_import_spark.tables import load_table
+from insight_gp_import_spark.sources import JdbcSinkConfig
+from insight_gp_import_spark.tables import load_table, shape_writers
 
 SF = "/root/testdata/sf0.001"
 
@@ -33,15 +33,13 @@ def test_jdbc_properties_override():
 
 def test_prepare_exact_writer_count_narrow(spark):
     df = load_table(spark, SF, "lineitem").repartition(16)
-    cfg = JdbcSinkConfig(url="jdbc:x", table="t", num_partitions=4)
-    shaped = prepare_jdbc_write(df, cfg)
+    shaped = shape_writers(df, 4)
     assert shaped.rdd.getNumPartitions() == 4
 
 
 def test_prepare_widens_with_repartition(spark):
     df = load_table(spark, SF, "region").coalesce(1)
-    cfg = JdbcSinkConfig(url="jdbc:x", table="t", num_partitions=8)
-    shaped = prepare_jdbc_write(df, cfg)
+    shaped = shape_writers(df, 8)
     assert shaped.rdd.getNumPartitions() == 8
 
 
@@ -54,25 +52,26 @@ def test_prepare_multifile_source_takes_coalesce_path(spark, tmp_path):
     load_table(spark, SF, "lineitem").repartition(16).write.parquet(out)
     df = spark.read.parquet(out)
     assert len(df.inputFiles()) >= 4
-    cfg = JdbcSinkConfig(url="jdbc:x", table="t", num_partitions=4)
-    shaped = prepare_jdbc_write(df, cfg)
+    shaped = shape_writers(df, 4)
     assert shaped.rdd.getNumPartitions() == 4
     plan = shaped._jdf.queryExecution().executedPlan().toString()
     assert "Coalesce" in plan and "Exchange" not in plan
 
 
 def test_prepare_no_rdd_materialization():
-    """Neither sink touches df.rdd (plan-to-RDD conversion per call;
-    unavailable under Spark Connect), and the COPY sink runs no RDD
-    action: foreachPartition tasks start a second Python worker pool
-    beside the one the SQL/Arrow operators share."""
+    """Neither sink nor their writer shaping in tables.py touches
+    df.rdd (plan-to-RDD conversion per call; unavailable under Spark
+    Connect), and the COPY sink runs no RDD action: foreachPartition
+    tasks start a second Python worker pool beside the one the
+    SQL/Arrow operators share."""
     import ast
     import inspect
 
     import insight_gp_import_spark.sources.jdbc as jdbc_mod
     import insight_gp_import_spark.sources.pgwire as pgwire_mod
+    import insight_gp_import_spark.tables as tables_mod
 
-    for mod in (jdbc_mod, pgwire_mod):
+    for mod in (jdbc_mod, pgwire_mod, tables_mod):
         tree = ast.parse(inspect.getsource(mod))
         rdd_calls = [
             n.attr for n in ast.walk(tree)

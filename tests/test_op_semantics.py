@@ -1,6 +1,9 @@
-"""Dedicated assertions for rows-only ops whose semantics the oracle
-can't check: approx-distinct error bound (SURVEY.md §2.D), tolerant
-scan quarantine counts, partitioned-sink round trip."""
+"""Op semantics beyond the DuckDB twin: every op's result is compared
+with its oracle elsewhere, and these tests pin what a hash of the
+result cannot show — approx-distinct and quantile error bounds
+(SURVEY.md §2.D), tolerant-scan quarantine counts, sink round trips,
+file lifecycle, z-order clustering, sketch merge invariants and
+Python data-source split planning."""
 
 from __future__ import annotations
 

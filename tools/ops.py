@@ -14,9 +14,9 @@ count is ``session.py``'s (``SPARK_GRAFT_CPUS``, default all).
   (``insight_gp_import_spark.compare``) at every SF dir and prints one
   JSON row per (op, sf) with status PASS, FAIL or ERROR; it exits
   non-zero if any row is not PASS. ``--workers N`` fans the ops over N
-  child processes (separate JVMs, each with a slice of the cores), then
-  checks the ``isolated`` ops serially in this process once the
-  children are done.
+  child processes (separate JVMs, at most one per core, each with an
+  equal slice of the cores), then checks the ``isolated`` ops serially
+  in this process once the children are done.
 - ``plans`` writes each op's ``explain("formatted")`` to
   ``<dir>/<op>_<tag>.txt``.
 - ``profile`` times each op with the noop sink (every column of every
@@ -108,20 +108,22 @@ def check(args, ops: dict[str, Op], names: list[str]) -> int:
     if args.workers > 1:
         shared = [n for n in names if not isolated(ops[n])]
         names = [n for n in names if isolated(ops[n])]
-        # N JVMs share the box: each gets a slice of the cores and a
-        # bounded heap
+        # the JVMs share the box: at most one per core, each with its
+        # slice of the cores (no oversubscription) and a bounded heap
+        cores = os.cpu_count() or 1
+        workers = min(args.workers, cores, len(shared))
         env = os.environ | {
-            "SPARK_GRAFT_CPUS": str(max(4, (os.cpu_count() or 32) // args.workers)),
+            "SPARK_GRAFT_CPUS": str(cores // max(1, workers)),
             "SPARK_GRAFT_DRIVER_MEM": "6g",
         }
         sys.stdout.flush()
         procs = [
             subprocess.Popen(
                 [sys.executable, os.path.abspath(__file__), "check",
-                 ",".join(shared[i::args.workers]), "--sf", args.sf],
+                 ",".join(shared[i::workers]), "--sf", args.sf],
                 stderr=subprocess.DEVNULL, env=env,
             )
-            for i in range(min(args.workers, len(shared)))
+            for i in range(workers)
         ]
         bad += sum(p.wait() != 0 for p in procs)
     if not names:
