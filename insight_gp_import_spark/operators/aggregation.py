@@ -529,9 +529,6 @@ def agg_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-AQ_ACCURACY = 1000  # approx_percentile accuracy: rank error <= n/accuracy
-
-
 @op(
     "agg_approx_quantile",
     oracle="""

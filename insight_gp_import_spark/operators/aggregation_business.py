@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from insight_gp_import_spark.operators.pairs import increasing_pairs
 from insight_gp_import_spark.registry import op, tracked_persist
 from insight_gp_import_spark.tables import load_table
 
@@ -561,18 +562,11 @@ def agg_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregations the raw counts already need.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    # r13 (guide §2.4 + §5, the r12 co-purchase de-join pattern): ONE
-    # distinct+collect_set pass builds each order's sorted item array,
-    # persisted at order cardinality; nb (row count), item frequencies
-    # (explode), and the pair counts (strictly-increasing in-JVM
-    # expansion — quadratic only in order size, the same bound the old
-    # self-join had) all derive from it. Before, the baskets distinct
-    # was re-evaluated FOUR times (nb, item, both self-join sides).
-    # Pair relation verified exceptAll-identical both ways at sf0.1
-    # before the swap; measured variants at sf0.1 (quiet, warm): old
-    # 1.95 s, persist-only 1.48, this 1.38 (the dejoin-without-persist
-    # form ties at 1.29 but re-runs the distinct 3x — at scale that is
-    # three full (orderkey, partkey) shuffles for one).
+    # ONE distinct+collect_set pass builds each order's sorted item
+    # array, persisted at order cardinality; nb (row count), item
+    # frequencies (explode) and the pair counts (increasing_pairs,
+    # quadratic only in order size) all derive from it, so the baskets
+    # distinct runs once, not once per consumer and self-join side.
     sets = tracked_persist(
         li.select("l_orderkey", "l_partkey")
         .distinct()
@@ -584,15 +578,7 @@ def agg_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_partkey"
     ).agg(F.count("*").alias("n_item"))
     pair = (
-        sets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) -> "
-                    "transform(slice(ps, i + 2, size(ps) - i - 1), "
-                    "y -> struct(x AS p1, y AS p2))))"
-                )
-            ).alias("pr")
-        )
+        sets.select(increasing_pairs("ps", "p1", "p2").alias("pr"))
         .groupBy(F.col("pr.p1").alias("p1"), F.col("pr.p2").alias("p2"))
         .agg(F.count("*").alias("n_pair"))
         .filter(F.col("n_pair") >= BASKET_MIN_CO)

@@ -1955,9 +1955,6 @@ def agg_did_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-WILSON_Z_MILLI = 1960  # z_{.975} = 1.96 as an exact milli literal
-
-
 @op(
     "agg_wilson_interval",
     oracle=f"""

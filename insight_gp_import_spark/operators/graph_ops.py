@@ -20,8 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from insight_gp_import_spark.operators.pairs import order_item_pairs
 from insight_gp_import_spark.registry import op, tracked_persist
-from insight_gp_import_spark.tables import load_table, spread_scan
+from insight_gp_import_spark.tables import load_table
 
 CAT = "graph"
 
@@ -32,45 +33,6 @@ PR_TOP_K = 20
 PR_D_NUM, PR_D_DEN = 17, 20
 
 
-def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(u, v, w) with u < v: part pairs sharing an order and the number
-    of orders w containing both — WITHOUT the lineitem self-join.
-
-    r12 optimization (guide §2.4 "remove shuffles outright", the
-    join_copurchase_pairs de-join generalized to the whole graph
-    family): the old per-op build was distinct() + equi-self-join on
-    l_orderkey + pair groupBy — three exchanges, with the distinct
-    subtree evaluated on BOTH join sides. Pair generation within one
-    order needs no join: one shuffle builds each order's sorted
-    distinct item array (collect_set has map-side partial
-    aggregation), an in-JVM higher-order function expands the
-    strictly-increasing pairs (quadratic only in order size, the same
-    bound the join had), and one shuffle counts pairs. Hot orders
-    don't exist (order size is bounded), so no salting is needed."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # r12b: under-split inputs (one-row-group test corpus) serialize
-    # the scan+partial-agg on one core; the keyed spread replaces the
-    # groupBy's own exchange 1:1 and widens the set build + pair
-    # expansion (1.8 s → 1.0 s at sf0.1; no-op at production splits,
-    # where map-side partial collect_set keeps its value).
-    li = spread_scan(li, "l_orderkey")
-    sets = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("ps")
-    )
-    pairs = sets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ps, (x, i) -> "
-                "transform(slice(ps, i + 2, size(ps) - i - 1), "
-                "y -> struct(x AS u, y AS v))))"
-            )
-        ).alias("pr")
-    )
-    return pairs.groupBy(
-        F.col("pr.u").alias("u"), F.col("pr.v").alias("v")
-    ).agg(F.count("*").alias("w"))
-
-
 def _copurchase_directed(
     spark: SparkSession, sf_dir: str, min_support: int = 1
 ) -> DataFrame:
@@ -79,7 +41,7 @@ def _copurchase_directed(
     of the old `a ⋈ b ON same order AND a.part <> b.part` builds. The
     u < v pair relation is mirrored AFTER the support filter, so the
     heavy distinct/count shuffle runs at half the directed volume."""
-    p = _copurchase_pairs(spark, sf_dir)
+    p = order_item_pairs(spark, sf_dir)
     if min_support > 1:
         p = p.filter(F.col("w") >= min_support)
     return p.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
@@ -280,9 +242,9 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds ≤8 is a different, larger number; the DuckDB twin counts
     the identical degree-ordered relation.
     """
-    # r12: de-joined edge build — the u < v pair relation from
-    # _copurchase_pairs IS the undirected distinct edge set
-    e = tracked_persist(_copurchase_pairs(spark, sf_dir).select("u", "v"))
+    # the u < v pair relation of order_item_pairs IS the undirected
+    # distinct edge set
+    e = tracked_persist(order_item_pairs(spark, sf_dir).select("u", "v"))
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))

@@ -16,6 +16,7 @@ import tempfile
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from insight_gp_import_spark.operators.pairs import order_item_pairs
 from insight_gp_import_spark.registry import op, tracked_persist
 from insight_gp_import_spark.tables import load_table, spread_scan
 
@@ -568,39 +569,16 @@ def join_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-collapse keeps multi-line duplicates of the same part from
     inflating pair counts.
 
-    Scale (r12 optimization, guide §2.4 "remove shuffles outright"):
-    the old form was distinct() + equi-self-join + pair groupBy — THREE
-    exchanges, with the distinct subtree evaluated on both join sides.
-    Pair generation within one order needs no join at all: one shuffle
-    on l_orderkey builds the sorted distinct item set per order
-    (collect_set has map-side partial aggregation), an in-JVM
-    higher-order function expands the strictly-increasing pairs
-    (quadratic only in order size, ~7 items → ~21 pairs — exactly the
-    bound the join had), and one shuffle aggregates the pairs. Plan:
-    2 Exchanges, no join, single scan of lineitem. Hot orders don't
-    exist (order size is bounded), so no salting needed.
+    Scale: :func:`~insight_gp_import_spark.operators.pairs.order_item_pairs`
+    builds the pairs without the join (2 Exchanges, a single lineitem
+    scan); this op only renames them and keeps the ones seen in at least
+    2 orders.
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # r12b: keyed spread — see graph_ops._copurchase_pairs (same
-    # shape, same 1:1 exchange replacement; no-op at production).
-    li = spread_scan(li, "l_orderkey")
-    sets = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("ps")
-    )
-    # sorted strictly-increasing distinct items → (ps[i], ps[j]) for
-    # i < j enumerates exactly the p1 < p2 pairs of the old theta-join
-    pairs = sets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ps, (x, i) -> "
-                "transform(slice(ps, i + 2, size(ps) - i - 1), "
-                "y -> struct(x AS p1, y AS p2))))"
-            )
-        ).alias("pr")
-    )
     return (
-        pairs.groupBy(F.col("pr.p1").alias("p1"), F.col("pr.p2").alias("p2"))
-        .agg(F.count("*").alias("n_orders"))
+        order_item_pairs(spark, sf_dir)
+        .select(
+            F.col("u").alias("p1"), F.col("v").alias("p2"), F.col("w").alias("n_orders")
+        )
         .filter(F.col("n_orders") >= 2)
     )
 

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from insight_gp_import_spark.operators.pairs import hash_blocks, increasing_pairs
 from insight_gp_import_spark.registry import op, tracked_persist
 from insight_gp_import_spark.tables import load_table, spread_scan
 
@@ -529,23 +530,6 @@ def _cross_explode(joined: DataFrame) -> DataFrame:
     )
 
 
-def _same_group_pairs(grp_docs: DataFrame) -> DataFrame:
-    """(d1, d2) strictly-increasing member pairs WITHIN each group of a
-    (…, docs sorted-array) frame — the jaccard-1 pairs of docs sharing
-    one identical token set, enumerated in-JVM from the sorted member
-    list (the graph co-purchase expansion pattern) instead of a
-    self-join at doc cardinality."""
-    return grp_docs.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(docs, (x, i) -> "
-                "transform(slice(docs, i + 2, size(docs) - i - 1), "
-                "y -> struct(x AS d1, y AS d2))))"
-            )
-        ).alias("p")
-    ).select("p.d1", "p.d2")
-
-
 def _expand_set_pairs(jac: DataFrame, grp_docs: DataFrame) -> DataFrame:
     """(kh1, kh2, j) distinct-set pairs → (d1, d2, jaccard) doc pairs:
     cross-expand each surviving set pair into its doc pairs, plus the
@@ -576,8 +560,8 @@ def _expand_set_pairs(jac: DataFrame, grp_docs: DataFrame) -> DataFrame:
             "kh2",
         )
     )
-    same = _same_group_pairs(grp_docs).select(
-        "d1", "d2", F.lit(1.0).alias("jaccard")
+    same = grp_docs.select(increasing_pairs("docs", "d1", "d2").alias("p")).select(
+        "p.d1", "p.d2", F.lit(1.0).alias("jaccard")
     )
     return cross.unionByName(same)
 
@@ -700,8 +684,8 @@ def _expand_mask_pairs(jac: DataFrame, mdocs: DataFrame) -> DataFrame:
             "m2",
         )
     )
-    same = _same_group_pairs(mdocs).select(
-        "d1", "d2", F.lit(1.0).alias("jaccard")
+    same = mdocs.select(increasing_pairs("docs", "d1", "d2").alias("p")).select(
+        "p.d1", "p.d2", F.lit(1.0).alias("jaccard")
     )
     return cross.unionByName(same)
 
@@ -1178,37 +1162,29 @@ KNN_K = 3
 def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-NN join: label-0 probes against the label-1 corpus, k=3.
 
-    Round-10 rewrite (r9 verdict item 2 — this was the last quadratic
-    production plan): the former ``corpus.crossJoin(broadcast(probes))``
-    evaluated |probes|·|corpus| interpreted zip_with/aggregate dot
-    products (~µs/pair) and ranked a full pair relation; at 100× the
-    probe side stops broadcasting and the HOF constant dominates —
-    the exact failure mode embed_dedup_threshold_sweep had before its
-    r9 blocked-GEMM rewrite. Now the same tile machinery
-    (training_dedup._sweep_pairs_blas, float64 GEMM per hash-assigned
-    block pair) computes the similarities at BLAS speed, and each tile
-    emits only its per-probe top-k — so the ranked relation is
-    |probes|·⌈|corpus|/BLOCK⌉·k rows, not |probes|·|corpus|, and the
-    final window partitions by probe over that bounded set. Per-tile
-    top-k under the total order (−sim, neighbor_id) is a lossless
-    partial top-k merge (the order is total: neighbor ids are unique).
+    A ``corpus.crossJoin(broadcast(probes))`` would evaluate
+    |probes|·|corpus| interpreted zip_with/aggregate dot products
+    (~µs/pair) and rank the full pair relation. Instead both sides are
+    hash-blocked (:func:`~insight_gp_import_spark.operators.pairs.hash_blocks`),
+    each block pair is one float64 GEMM, and each tile emits only its
+    per-probe top-k, so the ranked relation is |probes|·⌈|corpus|/BLOCK⌉·k
+    rows and the final window partitions by probe over that bounded set.
+    Per-tile top-k under the total order (−sim, neighbor_id) is a
+    lossless partial top-k merge (neighbor ids are unique).
 
-    Exact kNN is inherently an all-blocks product; neither side
-    broadcasts — probe blocks replicate only against the tiny corpus
-    block-ID list, and the tile join itself is an equi-join on the
+    Neither side broadcasts: probe blocks replicate only against the
+    tiny corpus block-ID list, and the tile join is an equi-join on the
     block id (no CartesianProduct in the plan). Numerics: float64
-    products/sums exactly like the interpreted fold it replaces;
-    GEMM summation-order deltas are sub-ulp against the 1e-4 rounding
-    grain (the _sweep_pairs_blas argument, proven by the unchanged
-    oracle there and here).
+    products/sums exactly like the interpreted fold; GEMM
+    summation-order deltas are sub-ulp against the 1e-4 rounding grain.
 
-    Preconditions/determinism (round 11, ADVICE items 1–2): zero-norm
-    embeddings are rejected loudly inside the tile (cosine would be
-    NaN, which argsort drops and Arrow nulls — unreproducible vs the
-    oracle's NaN-greatest ordering); emitted sims are re-evaluated per
-    selected pair with a tile-shape-independent einsum kernel, so
-    bitwise-identical vectors tie exactly across tiles and the global
-    (−sim, neighbor_id) tie-break is deterministic.
+    Preconditions/determinism: zero-norm embeddings are rejected loudly
+    inside the tile (cosine would be NaN, which argsort drops and Arrow
+    nulls — unreproducible vs the oracle's NaN-greatest ordering);
+    emitted sims are re-evaluated per selected pair with a
+    tile-shape-independent einsum kernel, so bitwise-identical vectors
+    tie exactly across tiles and the global (−sim, neighbor_id)
+    tie-break is deterministic.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("label") == 0).select(
@@ -1243,34 +1219,8 @@ def _knn_tile_topk(probes: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    ccnt = corpus.agg(F.count("*").alias("m"))
-    cblk = (
-        corpus.crossJoin(F.broadcast(ccnt))
-        .select(
-            F.expr(
-                f"pmod(hash(neighbor_id),"
-                f" greatest(1, cast(ceil(m / {KNN_BLOCK}.0D) as int)))"
-            ).alias("bid"),
-            "neighbor_id",
-            "cv",
-        )
-        .groupBy("bid")
-        .agg(F.collect_list(F.struct("neighbor_id", "cv")).alias("citems"))
-    )
-    pcnt = probes.agg(F.count("*").alias("m"))
-    pblk = (
-        probes.crossJoin(F.broadcast(pcnt))
-        .select(
-            F.expr(
-                f"pmod(hash(probe_id),"
-                f" greatest(1, cast(ceil(m / {KNN_BLOCK}.0D) as int)))"
-            ).alias("pbid"),
-            "probe_id",
-            "pv",
-        )
-        .groupBy("pbid")
-        .agg(F.collect_list(F.struct("probe_id", "pv")).alias("pitems"))
-    )
+    cblk = hash_blocks(corpus, "neighbor_id", "cv", KNN_BLOCK, "bid", "citems")
+    pblk = hash_blocks(probes, "probe_id", "pv", KNN_BLOCK, "pbid", "pitems")
     tiles_in = pblk.crossJoin(F.broadcast(cblk.select("bid"))).join(cblk, "bid")
 
     def tiles(it):
@@ -1294,14 +1244,13 @@ def _knn_tile_topk(probes: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
                 C = C[ord_id]
                 pn = np.sqrt((P * P).sum(axis=1))
                 cn = np.sqrt((C * C).sum(axis=1))
-                # Zero-norm precondition guard (round 11, ADVICE item 1):
-                # cosine to a zero vector is NaN (0/0); argsort would
-                # silently DROP it from the tile top-k (NaN sorts last),
-                # and NaN emitted from mapInPandas does not round-trip
-                # Arrow anyway (pandas NaN → null), so a zero-norm
-                # embedding cannot reproduce the NaN-greatest ordering
-                # the oracle uses. Fail loudly instead of silently
-                # changing top-k membership.
+                # Zero-norm precondition guard: cosine to a zero vector
+                # is NaN (0/0); argsort would silently DROP it from the
+                # tile top-k (NaN sorts last), and NaN emitted from
+                # mapInPandas does not round-trip Arrow anyway (pandas
+                # NaN → null), so a zero-norm embedding cannot reproduce
+                # the NaN-greatest ordering the oracle uses. Fail loudly
+                # instead of silently changing top-k membership.
                 if (pn == 0).any() or (cn == 0).any():
                     bad = np.concatenate(
                         [pid[pn == 0], nid[cn == 0]]
@@ -1322,7 +1271,7 @@ def _knn_tile_topk(probes: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
                 # kernel paths vary with tile shape, so bitwise-identical
                 # corpus vectors landing in different hash blocks could
                 # get last-ulp-different sims and flip the (−sim, id)
-                # tie-break at the global k boundary (ADVICE item 2).
+                # tie-break at the global k boundary.
                 # The einsum result depends only on the two vectors, so
                 # duplicate vectors now tie exactly across tiles. GEMM
                 # remains selection-only; at a sub-ulp GEMM selection

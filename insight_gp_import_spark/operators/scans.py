@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from insight_gp_import_spark.registry import op
+from insight_gp_import_spark.registry import op, tracked_persist
 from insight_gp_import_spark.tables import load_table
 
 CAT = "scans"
@@ -66,7 +66,6 @@ def scan_events_ns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CSV_GOOD_ROWS = 8
-CSV_BAD_ROWS = 2
 
 
 @op(
@@ -117,9 +116,11 @@ def scan_csv_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
     # referenced column is the internal corrupt-record column (a count()
     # over the filter would prune down to exactly that), and caching the
     # parsed batch is the documented workaround.
-    raw = spark.read.csv(
-        path, schema=schema, mode="PERMISSIVE", columnNameOfCorruptRecord="_bad"
-    ).cache()
+    raw = tracked_persist(
+        spark.read.csv(
+            path, schema=schema, mode="PERMISSIVE", columnNameOfCorruptRecord="_bad"
+        )
+    )
     return raw.filter(F.col("_bad").isNull()).select("id", "name", "amount")
 
 
@@ -159,9 +160,11 @@ def scan_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     # cache: same corrupt-record-column pruning restriction as the CSV op
-    raw = spark.read.json(
-        path, schema=schema, mode="PERMISSIVE", columnNameOfCorruptRecord="_bad"
-    ).cache()
+    raw = tracked_persist(
+        spark.read.json(
+            path, schema=schema, mode="PERMISSIVE", columnNameOfCorruptRecord="_bad"
+        )
+    )
     return raw.filter(F.col("_bad").isNull()).select("req_id", "status", "latency_ms")
 
 

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from insight_gp_import_spark.registry import op
+from insight_gp_import_spark.registry import op, tracked_persist
 from insight_gp_import_spark.tables import load_table
 
 CAT = "timeseries"
@@ -129,12 +129,10 @@ def ts_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "error")
     )
-    hourly = (
+    hourly = tracked_persist(
         ev.groupBy(
             "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
-        )
-        .agg(F.count("*").alias("n"))
-        .cache()
+        ).agg(F.count("*").alias("n"))
     )
     bounds = hourly.agg(F.min("h").alias("lo"), F.max("h").alias("hi"))
     spine = bounds.select(
@@ -294,14 +292,12 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "error")
     )
-    hourly = (
-        ev.groupBy("event_type", F.date_trunc("hour", F.col("ts")).alias("h"))
-        .agg(
+    hourly = tracked_persist(
+        ev.groupBy("event_type", F.date_trunc("hour", F.col("ts")).alias("h")).agg(
             F.expr(
                 "sum(cast(floor(value * 10000) as bigint)) div count(*)"
             ).alias("mc")
         )
-        .cache()
     )
     bounds = hourly.agg(F.min("h").alias("lo"), F.max("h").alias("hi"))
     spine = bounds.select(

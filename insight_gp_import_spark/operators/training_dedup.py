@@ -35,6 +35,7 @@ from insight_gp_import_spark.operators.llm import (
     _norm,
     char_trigram_zip_expr,
 )
+from insight_gp_import_spark.operators.pairs import cosine_self_pairs
 from insight_gp_import_spark.registry import op, tracked_persist
 from insight_gp_import_spark.tables import load_table, shuffle_width, spread_scan
 
@@ -236,86 +237,13 @@ def embed_allpairs_cosine(emb: DataFrame) -> DataFrame:
     """Exact all-pairs cosine > threshold over a (vec_id, embedding)
     frame — the quadratic ground-truth twin of ``embed_lsh_pairs``.
 
-    r12 optimization (guide §4.2: hand whole batches to vectorized
-    native code): the former BroadcastNestedLoopJoin evaluated an
-    interpreted ``zip_with``/``aggregate`` fold per pair (~µs/pair, the
-    same constant _sweep_pairs_blas's docstring measured driving its
-    Θ(n²) r8 stress walls) — 83 s at sf0.1's 2000×64 corpus. Now the
-    same hash-blocked float64 GEMM tile machinery computes every
-    cross/upper-triangle block tile with one ``A @ B.T`` per tile
-    (measured 1.5 s). Numerics: float64 products and sums exactly like
-    the fold it replaces; GEMM summation-order deltas are sub-ulp vs
-    the 1e-4 rounding grain and the 0.4 threshold (the established
-    _sweep_pairs_blas / _knn_tile_topk argument — oracle hashes
-    unchanged at sf0.01 and sf0.1). The raw-sim filter and the final
-    F.round stay in the plan, so rounding semantics are untouched."""
-    cnt = emb.agg(F.count("*").alias("m"))
-    blocks = emb.crossJoin(F.broadcast(cnt)).select(
-        F.expr(
-            f"pmod(hash(vec_id),"
-            f" greatest(1, cast(ceil(m / {SWEEP_BLOCK}.0D) as int)))"
-        ).alias("bid"),
-        "vec_id",
-        "embedding",
-    )
-    blk = blocks.groupBy("bid").agg(
-        F.collect_list(F.struct("vec_id", "embedding")).alias("items")
-    )
-    bp = blk.select(F.col("bid").alias("bid_a"), F.col("items").alias("items_a")).join(
-        F.broadcast(
-            blk.select(F.col("bid").alias("bid_b"), F.col("items").alias("items_b"))
-        ),
-        F.col("bid_a") <= F.col("bid_b"),
-    )
-
-    def tiles(it):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            v1_out: list = []
-            v2_out: list = []
-            sim_out: list = []
-            for items_a, items_b, ba, bb in zip(
-                pdf["items_a"], pdf["items_b"], pdf["bid_a"], pdf["bid_b"]
-            ):
-                ida = np.fromiter((r["vec_id"] for r in items_a), dtype=np.int64)
-                A = np.array([r["embedding"] for r in items_a], dtype=np.float64)
-                if ba == bb:
-                    idb, B = ida, A
-                else:
-                    idb = np.fromiter(
-                        (r["vec_id"] for r in items_b), dtype=np.int64
-                    )
-                    B = np.array(
-                        [r["embedding"] for r in items_b], dtype=np.float64
-                    )
-                na = np.sqrt((A * A).sum(axis=1))
-                nb = na if ba == bb else np.sqrt((B * B).sum(axis=1))
-                sims = (A @ B.T) / np.outer(na, nb)
-                # raw-sim threshold exactly as the old plan's filter;
-                # v1 < v2 orientation via min/max (same-block tiles
-                # take the id-ordered upper triangle so each unordered
-                # pair lands in exactly one tile)
-                mask = sims > EMBED_DUP_THRESHOLD
-                if ba == bb:
-                    mask &= ida[:, None] < idb[None, :]
-                if not mask.any():
-                    continue
-                ii, jj = np.nonzero(mask)
-                v1_out.append(np.minimum(ida[ii], idb[jj]))
-                v2_out.append(np.maximum(ida[ii], idb[jj]))
-                sim_out.append(sims[ii, jj])
-            if v1_out:
-                yield pd.DataFrame(
-                    {
-                        "v1": np.concatenate(v1_out),
-                        "v2": np.concatenate(v2_out),
-                        "sim": np.concatenate(sim_out),
-                    }
-                )
-
-    cand = bp.mapInPandas(tiles, "v1 long, v2 long, sim double")
+    The pairs come from the blocked-GEMM kernel
+    :func:`~insight_gp_import_spark.operators.pairs.cosine_self_pairs`
+    (1.5 s at sf0.1's 2000×64 corpus, against 83 s for a
+    BroadcastNestedLoopJoin over an interpreted zip_with/aggregate
+    fold). The raw sim is compared with the threshold and rounded by
+    F.round in the plan, so rounding semantics are Spark's."""
+    cand = cosine_self_pairs(emb, SWEEP_BLOCK, EMBED_DUP_THRESHOLD, lambda s: s)
     return cand.select("v1", "v2", F.round("sim", 4).alias("sim"))
 
 
@@ -2557,8 +2485,8 @@ def dedup_survivor_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SWEEP_THRESHOLDS_PM = (400, 450, 500, 550)  # permille; 400 = production cut
 
-# Spine gate (r9, verdict item 2): above this corpus size the sweep runs
-# on the deterministic 1-in-s spine vec_id % s = 0, s = ceil(n/GATE) —
+# Spine gate: above this corpus size the sweep runs on the
+# deterministic 1-in-s spine vec_id % s = 0, s = ceil(n/GATE) —
 # the declared, SQL-portable sampled tier that caps the pair stage at
 # GATE²/2 comparisons no matter how large the corpus. At every test SF
 # (n <= 2000) s = 1 and the spine is the whole corpus, so the exact
@@ -2567,100 +2495,15 @@ SWEEP_EXACT_MAX = 8192
 SWEEP_BLOCK = 512  # vectors per matmul block (~128 KB of float32)
 
 
-def _sweep_pairs_blas(samp: DataFrame, t0: float) -> DataFrame:
-    """Pair stage of the threshold sweep as BLOCKED MATRIX MULTIPLY:
-    vectors are hash-assigned to ~SWEEP_BLOCK-row blocks, the tiny
-    block relation is self-joined on bid_a <= bid_b (nb(nb+1)/2 rows,
-    nb <= 16 under the spine gate), and one Arrow batch per block pair
-    computes the full cross-block similarity tile with a single
-    float64 GEMM — replacing the former per-pair zip_with/aggregate
-    Catalyst expression tree, whose interpreted higher-order functions
-    cost ~8 µs/pair (the measured Θ(n²)-with-a-huge-constant driver of
-    the r8 stress: 52.5/250.4/553.6 s at 1×/2×/3×).
-
-    Numerics: products and sums in float64, exactly as the former
-    ``cast(p as double) * cast(q as double)`` fold (float32 inputs →
-    exact float64 products; summation-order deltas are sub-ulp
-    relative to the 1e-4 rounding grain and already tolerated between
-    Spark and DuckDB float32 cosine). Rounding uses
-    copysign(floor(|x|·10⁴ + 0.5)) — HALF-UP, Spark's F.round rule —
-    so the only reachable exact-boundary values (dyadics like 1/32,
-    which ARE representable and whose 5th decimal is 5) round
-    identically to the JVM path; np.round's HALF_EVEN would flip them.
-
-    Block assignment uses hash(vec_id) so spine-strided ids spread
-    evenly; assignment affects only tile shapes, never the output
-    (every unordered pair lands in exactly one tile: same-block tiles
-    take the id-ordered upper triangle, cross-block tiles are unique
-    by the bid_a < bid_b join and emit v2 = max id)."""
+def _round4_half_up(sims):
+    """Round to 1e-4 as copysign(floor(|x|·10⁴ + 0.5)): HALF-UP, the
+    F.round rule. The only exact-boundary values a cosine can take are
+    dyadics like 1/32, whose 5th decimal is 5; numpy's HALF_EVEN
+    np.round would round those differently from the JVM and the
+    oracle."""
     import numpy as np
-    import pandas as pd
 
-    cnt = samp.agg(F.count("*").alias("m"))
-    blocks = samp.crossJoin(F.broadcast(cnt)).select(
-        F.expr(
-            f"pmod(hash(vec_id),"
-            f" greatest(1, cast(ceil(m / {SWEEP_BLOCK}.0D) as int)))"
-        ).alias("bid"),
-        "vec_id",
-        "embedding",
-    )
-    blk = blocks.groupBy("bid").agg(
-        F.collect_list(F.struct("vec_id", "embedding")).alias("items")
-    )
-    bp = blk.select(F.col("bid").alias("bid_a"), F.col("items").alias("items_a")).join(
-        F.broadcast(
-            blk.select(F.col("bid").alias("bid_b"), F.col("items").alias("items_b"))
-        ),
-        F.col("bid_a") <= F.col("bid_b"),
-    )
-
-    def tiles(it):
-        for pdf in it:
-            v2_out: list = []
-            sim_out: list = []
-            for items_a, items_b, ba, bb in zip(
-                pdf["items_a"], pdf["items_b"], pdf["bid_a"], pdf["bid_b"]
-            ):
-                ida = np.fromiter(
-                    (r["vec_id"] for r in items_a), dtype=np.int64
-                )
-                A = np.array(
-                    [r["embedding"] for r in items_a], dtype=np.float64
-                )
-                if ba == bb:
-                    idb, B = ida, A
-                else:
-                    idb = np.fromiter(
-                        (r["vec_id"] for r in items_b), dtype=np.int64
-                    )
-                    B = np.array(
-                        [r["embedding"] for r in items_b], dtype=np.float64
-                    )
-                na = np.sqrt((A * A).sum(axis=1))
-                nb = na if ba == bb else np.sqrt((B * B).sum(axis=1))
-                sims = (A @ B.T) / np.outer(na, nb)
-                sim_r = (
-                    np.copysign(np.floor(np.abs(sims) * 1e4 + 0.5), sims)
-                    / 1e4
-                )
-                mask = sim_r > t0
-                if ba == bb:
-                    mask &= ida[:, None] < idb[None, :]
-                if not mask.any():
-                    continue
-                ii, jj = np.nonzero(mask)
-                v2_out.append(np.maximum(ida[ii], idb[jj]))
-                sim_out.append(sim_r[ii, jj])
-            if v2_out:
-                yield pd.DataFrame(
-                    {
-                        "v2": np.concatenate(v2_out),
-                        "sim_r": np.concatenate(sim_out),
-                    }
-                )
-
-    return bp.mapInPandas(tiles, "v2 long, sim_r double")
+    return np.copysign(np.floor(np.abs(sims) * 1e4 + 0.5), sims) / 1e4
 
 
 @op(
@@ -2719,9 +2562,7 @@ def embed_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     with zero survivors still reports its zero. Removal counts are
     distinct-id aggregates; shares integer ppm.
 
-    Scale tier (r9, verdict item 2 — the former plan was a full
-    quadratic HOF self-join, Θ(n²) with an ~8 µs/pair constant:
-    52.5/250.4/553.6 s at 1×/2×/3× in the r8 stress):
+    Scale tier (a quadratic HOF self-join costs ~8 µs/pair, Θ(n²)):
 
     1. DECLARED SPINE — above ``SWEEP_EXACT_MAX`` vectors the sweep
        runs on the deterministic spine ``vec_id % s = 0`` with
@@ -2732,11 +2573,11 @@ def embed_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
        full-corpus pair count over 100 TB of embeddings is neither
        computable nor what the decision needs). The spine is plain
        integer arithmetic, bit-identical in the DuckDB oracle, and
-       s = 1 (exact, output unchanged from r8) at every test SF.
+       s = 1 (exact) at every test SF.
     2. BLOCKED GEMM — the pair pass under the gate is
-       ``_sweep_pairs_blas``: hash-blocked float64 matmul tiles via
-       one Arrow batch per block pair, ~100× less per-pair cost than
-       the interpreted zip_with/aggregate tree it replaces.
+       :func:`~insight_gp_import_spark.operators.pairs.cosine_self_pairs`
+       scored by :func:`_round4_half_up`, ~100× less per-pair cost than
+       the interpreted zip_with/aggregate tree.
     """
     e = load_table(spark, sf_dir, "embeddings")
     sp = e.agg(F.count("*").alias("n_all")).select(
@@ -2750,7 +2591,9 @@ def embed_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.expr("vec_id % s = 0"))
         .select("vec_id", "embedding")
     )
-    pairs = _sweep_pairs_blas(samp, SWEEP_THRESHOLDS_PM[0] / 1000.0)
+    pairs = cosine_self_pairs(
+        samp, SWEEP_BLOCK, SWEEP_THRESHOLDS_PM[0] / 1000.0, _round4_half_up
+    ).select("v2", F.col("sim").alias("sim_r"))
     th = spark.createDataFrame(
         [(t,) for t in SWEEP_THRESHOLDS_PM], "t_pm int"
     )

@@ -262,7 +262,3 @@ def _load_events_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NTZ→TIMESTAMP reinterprets wall-clock in the session zone; only
     # value-preserving because ensure_events_read_confs pinned UTC above.
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}

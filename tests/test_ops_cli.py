@@ -45,3 +45,28 @@ def test_profile_prints_one_json_line():
     assert rec["op"] == "agg_hash_groupby"
     assert rec["noop_sec"] > 0
     assert rec["plan"]["Exchange"] >= 1
+
+
+def test_normalize_plan_masks_session_counters():
+    # no Spark: the normalizer is plain text in, text out
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "ops_cli", os.path.join(REPO, "tools", "ops.py")
+    )
+    ops = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(ops)
+    dump = (
+        "(3) Exchange\n"
+        "Arguments: hashpartitioning(l_orderkey#{a}L, 8), ENSURE_REQUIREMENTS, "
+        "[plan_id={p}]\n"
+        "(1) Scan ExistingRDD\n"
+        "Arguments: [t_pm#{b}], MapPartitionsRDD[{r}] at applySchemaToPythonRDD\n"
+    )
+    one = ops.normalize_plan(dump.format(a=12, b=7, p=132, r=127))
+    two = ops.normalize_plan(dump.format(a=905, b=88, p=1727, r=350))
+    assert one == two
+    assert "l_orderkey#NL, 8)" in one
+    assert "[plan_id=N]" in one and "MapPartitionsRDD[N]" in one
+    # operator numbers and literals are plan shape, not counters
+    assert one.startswith("(3) Exchange\n") and "(1) Scan ExistingRDD" in one

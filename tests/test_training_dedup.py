@@ -368,16 +368,22 @@ def test_ngram_verify_routed_total_over_zero_overlap_pairs(spark, monkeypatch):
 
 
 def test_sweep_gemm_pairs_match_hof_pairs(spark):
-    """The blocked-GEMM pair stage (r9) must emit the IDENTICAL
-    (v2, sim_r) multiset as the former zip_with/aggregate HOF form —
-    representation is a plan choice, never semantics. The HOF twin is
-    rebuilt inline here as the ground truth."""
+    """The sweep's blocked-GEMM pair stage (cosine_self_pairs scored by
+    _round4_half_up) must emit the IDENTICAL (v2, sim_r) multiset as a
+    zip_with/aggregate HOF self-join — representation is a plan choice,
+    never semantics. The HOF twin is built inline here as the ground
+    truth."""
     from collections import Counter
+
+    from insight_gp_import_spark.operators.pairs import cosine_self_pairs
 
     emb = load_table(spark, SF, "embeddings")
     t0 = td.SWEEP_THRESHOLDS_PM[0] / 1000.0
     got = Counter(
-        (r.v2, r.sim_r) for r in td._sweep_pairs_blas(emb, t0).collect()
+        (r.v2, r.sim)
+        for r in cosine_self_pairs(
+            emb, td.SWEEP_BLOCK, t0, td._round4_half_up
+        ).collect()
     )
 
     nrm = F.expr(

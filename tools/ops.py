@@ -18,7 +18,8 @@ count is ``session.py``'s (``SPARK_GRAFT_CPUS``, default all).
   equal slice of the cores), then checks the ``isolated`` ops serially
   in this process once the children are done.
 - ``plans`` writes each op's ``explain("formatted")`` to
-  ``<dir>/<op>_<tag>.txt``.
+  ``<dir>/<op>_<tag>.txt``, with the session-global counters masked
+  (see ``normalize_plan``) so dumps of one plan from two runs are equal.
 - ``profile`` times each op with the noop sink (every column of every
   row computed, no driver collect) and prints one JSON line per op:
   build time, noop wall time (min over ``--runs``) and plan-node counts.
@@ -76,6 +77,23 @@ def explain(df) -> str:
     """``df.explain("formatted")`` as a string."""
     mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
     return df._jdf.queryExecution().explainString(mode.fromString("formatted"))
+
+
+# Counters that number expressions, plans and RDDs session-wide: equal
+# plans built in different sessions (or after different ops) differ only
+# in these.
+_PLAN_COUNTERS = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"\bplan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+)
+
+
+def normalize_plan(plan: str) -> str:
+    """``plan`` with expression ids, plan ids and RDD ids masked."""
+    for pat, mask in _PLAN_COUNTERS:
+        plan = pat.sub(mask, plan)
+    return plan
 
 
 def plan_stats(plan: str) -> dict:
@@ -155,7 +173,7 @@ def plans(args, ops: dict[str, Op], names: list[str]) -> int:
         for name in names:
             path = os.path.join(args.dir, f"{name}_{args.tag}.txt")
             with open(path, "w") as f:
-                f.write(explain(ops[name].fn(spark, args.sf)))
+                f.write(normalize_plan(explain(ops[name].fn(spark, args.sf))))
             print(f"wrote {path}", flush=True)
     return 0
 
