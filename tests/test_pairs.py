@@ -13,11 +13,11 @@ import numpy as np
 import pytest
 
 import insight_gp_import_spark
+from conftest import SF01 as SF
 from insight_gp_import_spark.operators import training_dedup as td
 from insight_gp_import_spark.operators.pairs import cosine_self_pairs, hash_blocks
 from insight_gp_import_spark.tables import load_table
 
-SF = "/root/testdata/sf0.01"
 PKG = pathlib.Path(insight_gp_import_spark.__file__).parent
 
 # 990 of sf0.01's 124 750 pairs have cosine > 0.3: enough to reach
