@@ -11,13 +11,13 @@ move is bucketing both tables on the key at write time (see
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-import tempfile
 
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from insight_gp_import_spark.operators.pairs import order_item_pairs
 from insight_gp_import_spark.registry import op, tracked_persist
+from insight_gp_import_spark.scratch import scratch_dir
 from insight_gp_import_spark.tables import load_table, spread_scan
 
 CAT = "joins"
@@ -2795,9 +2795,9 @@ def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_quantity", F.year("l_shipdate").alias("ship_year")
     )
-    fact_dir = tempfile.mkdtemp(prefix="igis-dpp-fact-")
+    fact_dir = scratch_dir("igis-dpp-fact-")
     li.write.partitionBy("ship_year").parquet(fact_dir, mode="overwrite")
-    dim_dir = tempfile.mkdtemp(prefix="igis-dpp-dim-")
+    dim_dir = scratch_dir("igis-dpp-dim-")
     spark.createDataFrame(
         [
             (y, "recent" if y >= DPP_ERA_SPLIT else "old")

@@ -19,12 +19,20 @@ needs on top of the reference's ETL surface. Design rules:
 from __future__ import annotations
 
 from functools import lru_cache
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from insight_gp_import_spark.operators.pairs import hash_blocks, increasing_pairs
+from insight_gp_import_spark.operators.pairs import (
+    bitmap_overlap,
+    bounded_vocab,
+    hash_blocks,
+    increasing_pairs,
+    join_gids,
+    set_bitmaps,
+)
 from insight_gp_import_spark.registry import op, tracked_persist
 from insight_gp_import_spark.tables import load_table, spread_scan
 
@@ -34,13 +42,6 @@ JACCARD_THRESHOLD = 0.8
 # exact rational form of the threshold for the AllPairs prefix/length
 # filters (integer math, no float ceil)
 JACCARD_T_NUM, JACCARD_T_DEN = 4, 5
-# vocab gate for the verify representation (round-9; same rationale as
-# training_dedup.NGRAM_BITMAP_MAX_VOCAB): token vocabularies at or
-# under this size verify candidates with fixed-width bitmaps
-# (popcount(AND), ceil(V/64) longs/set) instead of shuffling the full
-# token arrays through the candidate join; at or under 64 tokens the
-# whole set IS one BIGINT and the op collapses to integer expressions.
-JACCARD_BITMAP_MAX_VOCAB = 16384
 
 
 def _dot_sql(x: str, y: str) -> str:
@@ -266,47 +267,40 @@ def dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design, three layers (each lossless):
 
     1. Docs collapse to DISTINCT token-sets first — identical sets are
-       jaccard-1 without any join; the pair search runs on set
-       fingerprints and doc pairs are expanded back at the end.
-    2. Set fingerprint = md5 of the joined token list, so the (possibly
-       multi-KB) token-set string never travels as a join/shuffle key —
-       only 32-char hashes do.
-    3. AllPairs prefix filtering (Bayardo et al., WWW'07), the same
-       scheme dedup_ngram_jaccard uses: order tokens by global document
-       frequency (rarest first); a pair with J ≥ t must share a token
-       inside both prefixes of length n − ceil(t·n) + 1, so the
+       jaccard-1 without any join; the pair search runs on set keys
+       and doc pairs are expanded back at the end.
+    2. A set's key is a BIGINT mask or md5(min member doc_id), so the
+       (possibly multi-KB) token set never travels as a join key (see
+       ``_set_jaccard``).
+    3. AllPairs prefix filtering (``_allpairs_candidates``): the
        candidate join touches only the rarest ≈ (1−t)·n tokens of each
-       set. This removes the quadratic blow-up on stop-words ("the"
-       joins every set against every set in the naive token join);
-       candidate count becomes proportional to true near-duplication.
-       Exact verification (array_intersect on the full sets) runs on
-       candidates only, so precision is unchanged.
+       set, so stop-words do not join every set with every set, and
+       exact verification runs on candidates only.
 
     The oracle is deliberately the NAIVE all-token-join formulation —
     an independent plan computing the same relation is a stronger
     differential check than a mirrored one.
 
-    Library note (round 4): this is the EXACT twin. The default
-    near-dup entry point is ``insight_gp_import_spark.dedup.
-    near_dup_pairs`` which dispatches to the MinHash-banded plan
-    unless ``exact=True`` — a 100 TB user cannot pick the
-    candidate-quadratic-on-hot-tokens plan by accident.
+    This is the EXACT twin. The default near-dup entry point,
+    ``insight_gp_import_spark.dedup.near_dup_pairs``, dispatches to the
+    MinHash-banded plan unless ``exact=True``.
     """
     return allpairs_jaccard_pairs(_doc_token_sets(spark, sf_dir))
 
 
 def _keyed_set_groups(sets_in: DataFrame) -> DataFrame:
-    """(kh, sid, arr, n, docs) — one persisted row per DISTINCT token
-    set. Set identity comes from grouping on the sorted token ARRAY
-    itself (round 10, ADVICE fix): the previous '|'-joined md5 string
-    key aliased two distinct sets whose tokens contain '|' (tokens are
-    space-split, so '|' is a legal token byte — {'a|b'} vs {'a','b'}
-    collide), merging them into one group and emitting spurious
-    jaccard-1.0 pairs. ``kh = md5(min-member doc_id)`` is injective
-    because each doc owns exactly one token set, so group minima are
-    distinct across groups; every downstream consumer (AllPairs
-    candidates, verify joins, band hashes, pair expansion) uses kh only
-    as an opaque join/order key, never as content."""
+    """(kh, sid, arr, n, docs), persisted: one row per DISTINCT token
+    set, ``docs`` its sorted member doc_ids and ``sid`` the smallest.
+
+    Set identity is the sorted token ARRAY itself. A '|'-joined string
+    key would alias two distinct sets whose tokens contain '|' (tokens
+    are space-split, so {'a|b'} and {'a', 'b'} collide) and emit a
+    spurious jaccard-1.0 pair. ``kh = md5(sid)`` is injective because
+    each doc owns exactly one token set, so group minima are distinct
+    across groups; every consumer uses kh only as an opaque join/order
+    key, never as content. The persist serves the candidate join, the
+    verify and the expansion, which would otherwise each re-run the
+    corpus tokenization."""
     return tracked_persist(
         sets_in.select("doc_id", "arr")
         .groupBy("arr")
@@ -321,85 +315,153 @@ def _keyed_set_groups(sets_in: DataFrame) -> DataFrame:
     )
 
 
-def allpairs_jaccard_pairs(sets_in: DataFrame) -> DataFrame:
-    """Exact Jaccard > t pairs over a (doc_id, arr, k, n) token-set
-    frame (AllPairs prefix + length filtering; see the op docstring).
-
-    Round-9 (verdict item 1): the verify REPRESENTATION is vocab-gated,
-    the same measured-statistic plan choice dedup_ngram_jaccard uses
-    (training_dedup.py:551) — one bounded driver probe of at most
-    JACCARD_BITMAP_MAX_VOCAB+1 distinct tokens decides the branch and
-    feeds the token→id map; it never touches results:
-
-    - V ≤ 64: a token set IS one BIGINT mask. Set identity, the
-      candidate shuffle, the distinct, the verify (bit_count(m1 & m2))
-      and both sizes (bit_count) all become integer expressions — no
-      md5-string candidate keys, no array payloads, no verify join at
-      all. Measured at sf0.1 (V=31, 3 935 distinct sets, 2.49 M output
-      pairs): 71.4 s → see BENCH_NOTES round-9.
-    - V ≤ JACCARD_BITMAP_MAX_VOCAB: kh-keyed AllPairs candidates as
-      before, but verification joins fixed-width bitmaps
-      (ceil(V/64) longs/set, popcount(AND)) instead of token arrays —
-      ~20× less verify shuffle, doc size irrelevant.
-    - larger vocabularies (real word spaces at 100 TB): the original
-      array_intersect verify on candidates.
-
-    All three branches compute the identical exact (shared, n1, n2)
-    integers, so the rounded jaccard — and the oracle hash — are
-    branch-independent (pinned by test_llm_ops.py's
-    branch-equivalence test). The oracle stays the NAIVE all-token
-    join, untouched.
-    """
-    # bounded branch probe (plan choice + gid map only, never results):
-    # collecting at most MAX_VOCAB+1 distinct tokens is bounded driver
-    # state by construction; overflow means "large vocabulary", where
-    # only the probe's LENGTH (never its content) is used.
-    probe = (
-        sets_in.select(F.explode("arr").alias("tok"))
-        .distinct()
-        .limit(JACCARD_BITMAP_MAX_VOCAB + 1)
-        .collect()
-    )
-    vocab = sorted(r[0] for r in probe)
-    if len(vocab) <= 64:
-        return _jaccard_pairs_mask64(sets_in, vocab)
-    # grp persisted (round 9b, inside _keyed_set_groups): it feeds the
-    # candidate join, the verify bitmap build AND the expansion's
-    # member lists — without the persist every consumer re-runs the
-    # full tokenize-explode-distinct-groupBy lineage over the corpus.
-    # r13: the expansion consumes grp's docs ARRAYS directly (set-level
-    # joins, in-JVM fan-out) — the exploded (kh, doc_id) persist is
-    # gone with the doc-cardinality joins it served.
-    grp = _keyed_set_groups(sets_in)
-    gs = grp.select("kh", "arr", "n")
-    cand = _allpairs_candidates(gs)
-    if len(vocab) <= JACCARD_BITMAP_MAX_VOCAB:
-        jac = _jaccard_verify_bitmap(cand, gs, vocab)
-    else:
-        jac = _jaccard_verify_arrays(cand, gs)
-    return _expand_set_pairs(jac, grp.select("kh", "docs"))
+# the set bits of a V ≤ 64 mask m, as ascending token ids
+_MASK_GIDS = "filter(sequence(0, 63), b -> (shiftright(m, b) & 1) = 1)"
 
 
-def _allpairs_candidates(gs: DataFrame) -> DataFrame:
-    """AllPairs prefix+length-filtered candidate (kh1, kh2) pairs over
-    the distinct-set frame (Bayardo et al., WWW'07; see the op
-    docstring for the scheme)."""
+class _SetJaccard(NamedTuple):
+    key: str  # "m" (BIGINT mask) or "kh"
+    jac: DataFrame  # (<key>1, <key>2, j) surviving set pairs, <key>1 < <key>2
+    groups: DataFrame  # (<key>, sid, arr, ...) one row per distinct set
+    members: DataFrame  # (<key>, docs) each set's sorted member doc_ids
+    doc_mask: DataFrame | None  # (doc_id, m) each doc's mask, mask branch only
+
+
+def _set_jaccard(sets_in: DataFrame) -> _SetJaccard:
+    """Exact jaccard > t over the DISTINCT token sets of a (doc_id, arr)
+    frame.
+
+    One bounded vocabulary probe picks the set representation. Every
+    branch computes the same exact (shared, n1, n2) integers, so the
+    choice never changes a result:
+
+    - V ≤ 64, key ``m``: a set IS one BIGINT mask, bit i for token i of
+      the sorted vocab. The mask is injective, so it is the set
+      identity; candidate keys are longs, and the verify needs no join
+      (shared = bit_count(m1 & m2), each size = bit_count(m)).
+    - V ≤ ``pairs.BITMAP_MAX_VOCAB``, key ``kh``: candidates verify
+      against fixed-width bitmaps, ceil(V/64) longs per set instead of
+      the token arrays, whatever the doc size.
+    - larger vocabularies: array_intersect of the token arrays.
+
+    All branches take their candidates from
+    :func:`_allpairs_candidates`."""
+    vocab = bounded_vocab(sets_in.select(F.explode("arr").alias("tok")))
+    if vocab is not None and len(vocab) <= 64:
+        doc_mask = tracked_persist(
+            join_gids(
+                sets_in.select("doc_id", F.explode("arr").alias("tok")), "tok", vocab
+            )
+            .groupBy("doc_id")
+            .agg(F.bit_or(F.expr("shiftleft(1L, gid)")).alias("m"))
+        )
+        # persisted: the dfreq aggregate and the ranking join both read it
+        mtoks = tracked_persist(
+            doc_mask.select("m")
+            .distinct()
+            .select(
+                "m",
+                F.bit_count("m").alias("n"),
+                F.explode(F.expr(_MASK_GIDS)).alias("gid"),
+            )
+        )
+        shared = F.bit_count(F.col("m1").bitwiseAND(F.col("m2")))
+        jac = _over_threshold(
+            _allpairs_candidates(mtoks),
+            "m",
+            shared,
+            F.bit_count("m1"),
+            F.bit_count("m2"),
+        )
+        # sorted members make element_at(docs, 1) the min doc_id. The
+        # expansion reads mdocs itself: a rename directly over a cached
+        # plan folds into the cache scan. arr is rebuilt from the mask
+        # bits, so the md5 minhashes see exactly the original tokens.
+        mdocs = tracked_persist(
+            doc_mask.groupBy("m").agg(
+                F.sort_array(F.collect_list("doc_id")).alias("docs")
+            )
+        )
+        groups = mdocs.select(
+            "m",
+            F.element_at("docs", 1).alias("sid"),
+            F.array(*[F.lit(t) for t in vocab]).alias("varr"),
+        ).select(
+            "m",
+            "sid",
+            F.expr(f"transform({_MASK_GIDS}, b -> element_at(varr, b + 1))").alias(
+                "arr"
+            ),
+        )
+        return _SetJaccard("m", jac, groups, mdocs, doc_mask)
+    groups = _keyed_set_groups(sets_in)
+    gs = groups.select("kh", "arr", "n")
     stoks = gs.select("kh", "n", F.explode("arr").alias("tok"))
-    freq = stoks.groupBy("tok").agg(F.count("*").alias("dfreq"))
-    # AllPairs needs each set's tokens ordered rarest-first; any total
-    # order works, so order the per-set window by the (dfreq, tok) tuple
-    # directly instead of materializing a global integer rank — a global
-    # rank is an un-partitioned Window.orderBy, i.e. a single-task sort
-    # of the whole vocabulary (billions of rows at 100 TB). The dfreq
-    # join reuses the groupBy's tok-partitioning (no broadcast hint:
-    # a 100 TB vocab can't broadcast; AQE converts when it is small).
-    td = stoks.join(freq, "tok")
-    pos = td.select(
+    if vocab is None:
+        side, c, shared = gs, "arr", F.size(F.array_intersect("arr1", "arr2"))
+    else:
+        side = set_bitmaps(stoks, ["kh", "n"], "tok", vocab)
+        c, shared = "bm", bitmap_overlap("bm1", "bm2")
+    s1, s2 = (
+        side.select(
+            F.col("kh").alias(f"kh{i}"),
+            F.col(c).alias(f"{c}{i}"),
+            F.col("n").alias(f"n{i}"),
+        )
+        for i in (1, 2)
+    )
+    jac = _over_threshold(
+        _allpairs_candidates(stoks).join(s1, "kh1").join(s2, "kh2"),
         "kh",
-        "tok",
+        shared,
+        F.col("n1"),
+        F.col("n2"),
+    )
+    return _SetJaccard("kh", jac, groups, groups.select("kh", "docs"), None)
+
+
+def _over_threshold(
+    rel: DataFrame, key: str, shared: Column, n1: Column, n2: Column
+) -> DataFrame:
+    """(<key>1, <key>2, j) rows of ``rel`` with j = shared / union above
+    the threshold."""
+    return rel.select(
+        f"{key}1", f"{key}2", (shared / (n1 + n2 - shared)).alias("j")
+    ).filter(F.col("j") > JACCARD_THRESHOLD)
+
+
+def allpairs_jaccard_pairs(sets_in: DataFrame) -> DataFrame:
+    """Exact Jaccard > t doc pairs over a (doc_id, arr, k, n) token-set
+    frame: :func:`_set_jaccard` on the distinct sets, expanded to doc
+    pairs. The oracle stays the naive all-token join."""
+    sj = _set_jaccard(sets_in)
+    return _expand_set_pairs(sj.jac, sj.members, sj.key)
+
+
+def _allpairs_candidates(stoks: DataFrame) -> DataFrame:
+    """AllPairs prefix- and length-filtered candidate set pairs
+    (<key>1, <key>2), <key>1 < <key>2, from a (key, n, tok) relation: one
+    row per token of each distinct set of size n.
+
+    Prefix theorem (Bayardo et al., WWW'07): order every set's tokens by
+    one global total order; a pair with J ≥ t shares a token inside both
+    prefixes of length n − ceil(t·n) + 1. Ordering rarest-first (by
+    set-level document frequency, ties by token) keeps the prefix join
+    on rare tokens, so candidates grow with true near-duplication, not
+    with stop-word fan-out. Any total order is correct, which is why the
+    mask branch may order by token id. The order is the (dfreq, tok)
+    tuple inside a per-set window, never a global rank: that would be an
+    un-partitioned window, a one-task sort of the whole vocabulary.
+    Length filter: J ≥ t bounds the ratio of the two sizes by t."""
+    key, _, tok = stoks.columns
+    k1, k2 = f"{key}1", f"{key}2"
+    freq = stoks.groupBy(tok).agg(F.count("*").alias("dfreq"))
+    pos = stoks.join(freq, tok).select(
+        key,
+        tok,
         "n",
         F.row_number()
-        .over(Window.partitionBy("kh").orderBy("dfreq", "tok"))
+        .over(Window.partitionBy(key).orderBy("dfreq", tok))
         .alias("pos"),
     )
     prefix_len = (
@@ -407,119 +469,45 @@ def _allpairs_candidates(gs: DataFrame) -> DataFrame:
         - F.expr(f"({JACCARD_T_NUM} * n + {JACCARD_T_NUM}) div {JACCARD_T_DEN}")
         + 1
     )
-    # r12: persist the prefix relation — the candidate join is a
-    # SELF-join of pref, so the explode + dfreq join + per-set window
-    # chain otherwise runs twice (guide §2.4).
+    # persisted: the candidate join is a SELF-join of pref, so the window
+    # chain would otherwise run twice
     pref = tracked_persist(
-        pos.filter(F.col("pos") <= prefix_len).select("kh", "tok", "n")
+        pos.filter(F.col("pos") <= prefix_len).select(key, tok, "n")
     )
-    a = pref.select(F.col("kh").alias("kh1"), "tok", F.col("n").alias("pn1"))
-    b = pref.select(F.col("kh").alias("kh2"), "tok", F.col("n").alias("pn2"))
-    # length filter (part of AllPairs): J ≥ t bounds |x|/|y| within t
+    a = pref.select(F.col(key).alias(k1), tok, F.col("n").alias("pn1"))
+    b = pref.select(F.col(key).alias(k2), tok, F.col("n").alias("pn2"))
     return (
-        a.join(b, "tok")
+        a.join(b, tok)
         .filter(
-            (F.col("kh1") < F.col("kh2"))
+            (F.col(k1) < F.col(k2))
             & (
                 JACCARD_T_DEN * F.least("pn1", "pn2")
                 >= JACCARD_T_NUM * F.greatest("pn1", "pn2")
             )
         )
-        .select("kh1", "kh2")
+        .select(k1, k2)
         .distinct()
     )
 
 
-def _jaccard_verify_arrays(cand: DataFrame, gs: DataFrame) -> DataFrame:
-    """Exact candidate verification for LARGE vocabularies: join the
-    full token arrays back for surviving candidates only and
-    array_intersect them — the original (pre-round-9) representation,
-    kept for word/shingle spaces where a bitmap would dwarf the set."""
-    g1 = gs.select(
-        F.col("kh").alias("kh1"), F.col("arr").alias("arr1"), F.col("n").alias("n1")
-    )
-    g2 = gs.select(
-        F.col("kh").alias("kh2"), F.col("arr").alias("arr2"), F.col("n").alias("n2")
-    )
-    shared = F.size(F.array_intersect("arr1", "arr2"))
-    return (
-        cand.join(g1, "kh1")
-        .join(g2, "kh2")
-        .select(
-            "kh1",
-            "kh2",
-            (shared / (F.col("n1") + F.col("n2") - shared)).alias("j"),
-        )
-        .filter(F.col("j") > JACCARD_THRESHOLD)
-    )
+def _expand_set_pairs(jac: DataFrame, members: DataFrame, key: str) -> DataFrame:
+    """(<key>1, <key>2, j) set pairs → (d1, d2, jaccard) doc pairs, with
+    ``members`` the (<key>, docs) member lists.
 
-
-def _jaccard_verify_bitmap(
-    cand: DataFrame, gs: DataFrame, vocab: list
-) -> DataFrame:
-    """Exact candidate verification for SMALL vocabularies (64 < V ≤
-    JACCARD_BITMAP_MAX_VOCAB): dense token ids from the caller's
-    bounded probe, one fixed-width bitmap of ceil(V/64) longs per
-    distinct set, shared = Σ popcount(AND) — bit-exact equal to
-    |set ∩| because ids are dense and unique. Mirrors
-    training_dedup._ngram_verify_bitmap (same shuffle-volume
-    rationale); the gid map is broadcast driver state, never a global
-    rank (the plan guard forbids SinglePartition windows here)."""
-    nwords = (len(vocab) + 63) // 64
-    spark = cand.sparkSession
-    gids = spark.createDataFrame(
-        [(t, i) for i, t in enumerate(vocab)], "tok string, gid int"
+    Each set's member list is ONE row, so both attachment joins run at
+    distinct-set cardinality, and the output-proportional fan-out is two
+    cascaded explodes after them: no join shuffles pair-proportional
+    volume, and no |da|×|db| struct array is built per row (that form
+    cost ~0.7 s more on sf0.1's 2.49 M pairs). Docs sharing one set are
+    the jaccard-1 pairs, enumerated from the sorted member list."""
+    joined = jac.join(
+        members.select(F.col(key).alias(f"{key}1"), F.col("docs").alias("da_arr")),
+        f"{key}1",
+    ).join(
+        members.select(F.col(key).alias(f"{key}2"), F.col("docs").alias("db_arr")),
+        f"{key}2",
     )
-    # r12: persisted — the verify join consumes bm on BOTH candidate
-    # sides, so the explode + gid join + bitmap fold otherwise runs
-    # twice (guide §2.4).
-    bm = tracked_persist(
-        gs.select("kh", "n", F.explode("arr").alias("tok"))
-        .join(F.broadcast(gids), "tok")
-        .groupBy("kh", "n")
-        .agg(F.collect_set("gid").alias("gidset"))
-        .select(
-            "kh",
-            "n",
-            F.expr(
-                f"transform(sequence(0, {nwords - 1}), w -> aggregate("
-                "filter(gidset, x -> CAST(x div 64 AS INT) = w), 0L,"
-                " (acc, x) -> acc | shiftleft(1L, CAST(x % 64 AS INT))))"
-            ).alias("bm"),
-        )
-    )
-    b1 = bm.select(
-        F.col("kh").alias("kh1"), F.col("bm").alias("bm1"), F.col("n").alias("n1")
-    )
-    b2 = bm.select(
-        F.col("kh").alias("kh2"), F.col("bm").alias("bm2"), F.col("n").alias("n2")
-    )
-    shared = F.expr(
-        "aggregate(zip_with(bm1, bm2, (x, y) -> bit_count(x & y)),"
-        " 0, (a, b) -> a + b)"
-    )
-    return (
-        cand.join(b1, "kh1")
-        .join(b2, "kh2")
-        .select(
-            "kh1",
-            "kh2",
-            (shared / (F.col("n1") + F.col("n2") - shared)).alias("j"),
-        )
-        .filter(F.col("j") > JACCARD_THRESHOLD)
-    )
-
-
-def _cross_explode(joined: DataFrame) -> DataFrame:
-    """(…, da_arr, db_arr, j) → (d1, d2, j): every (a, b) combination
-    of the two member lists via TWO cascaded explodes. Session 1 built
-    the full |da|×|db| STRUCT array per row (flatten ∘ transform ∘
-    transform) and exploded once; the cascade emits the same rows
-    without ever materializing the cross array or allocating a struct
-    per pair — each Generate streams plain bigints (measured: the
-    struct-array form cost ~+0.7 s on the 2.49 M-pair expansion at
-    sf0.1). Shared by every pair-expansion path (r13)."""
-    return (
+    cross = (
         joined.select(F.explode("da_arr").alias("da"), "db_arr", "j")
         .select("da", F.explode("db_arr").alias("db"), "j")
         .select(
@@ -528,227 +516,39 @@ def _cross_explode(joined: DataFrame) -> DataFrame:
             F.round("j", 4).alias("jaccard"),
         )
     )
-
-
-def _expand_set_pairs(jac: DataFrame, grp_docs: DataFrame) -> DataFrame:
-    """(kh1, kh2, j) distinct-set pairs → (d1, d2, jaccard) doc pairs:
-    cross-expand each surviving set pair into its doc pairs, plus the
-    jaccard-1 pairs of docs sharing an identical set (no join needed
-    to discover those — same kh ⇒ same set).
-
-    r13 (VERDICT item 4, guide §2.3 "aggregate before you shuffle" /
-    §8 expand-once-at-the-end): ``grp_docs`` carries each group's
-    member list as ONE row (kh, docs) — the list _keyed_set_groups
-    already aggregates — so both attachment joins run at DISTINCT-SET
-    cardinality and the output-proportional doc-pair fan-out happens
-    in-JVM via explode AFTER the joins. The old formulation joined an
-    exploded (kh, doc_id) relation twice: the second join's probe side
-    was already pair-expanded on the left group, so both joins
-    shuffled output-proportional volume (~2.49 M rows at sf0.1). The
-    jaccard-1 branch likewise replaces a doc-cardinality self-join
-    with the in-JVM member-pair enumeration."""
-    cross = _cross_explode(
-        jac.join(
-            grp_docs.select(
-                F.col("kh").alias("kh1"), F.col("docs").alias("da_arr")
-            ),
-            "kh1",
-        ).join(
-            grp_docs.select(
-                F.col("kh").alias("kh2"), F.col("docs").alias("db_arr")
-            ),
-            "kh2",
-        )
-    )
-    same = grp_docs.select(increasing_pairs("docs", "d1", "d2").alias("p")).select(
+    same = members.select(increasing_pairs("docs", "d1", "d2").alias("p")).select(
         "p.d1", "p.d2", F.lit(1.0).alias("jaccard")
     )
     return cross.unionByName(same)
-
-
-def _mask64_jac(base: DataFrame, vocab: list) -> tuple[DataFrame, DataFrame]:
-    """Candidate+verify core of the V ≤ 64 branch: returns
-    (jac (m1, m2, j) surviving SET-mask pairs, doc_mask (doc_id, m)).
-    Split out of _jaccard_pairs_mask64 (r12) so jaccard_set_adjacency
-    can consume the set-level relation without the doc expansion.
-
-    The V ≤ 64 collapse of the AllPairs plan: every token set is ONE
-    BIGINT mask (bit i = token i of the probe's sorted vocab), so
-
-    - set identity = the mask itself (injective by construction) — the
-      candidate join, its distinct, and the doc expansion all key on
-      8-byte longs instead of 32-char md5 strings;
-    - verification needs NO join at all: shared = bit_count(m1 & m2)
-      and each size = bit_count(m), evaluated inline on the candidate
-      row (whole-stage codegen integer ops);
-    - the jaccard-1 branch groups docs by mask directly.
-
-    The AllPairs prefix/length filters are unchanged (same per-set
-    window ordered by set-level document frequency — any total order
-    is correct for the prefix theorem, so the gid order standing in
-    for the token-string order does not change the result set)."""
-    spark = base.sparkSession
-    gids = spark.createDataFrame(
-        [(t, i) for i, t in enumerate(vocab)], "tok string, gid int"
-    )
-    # (doc_id, mask): persisted — consumed by the freq path, both doc
-    # expansions and the same-mask branch; 16 bytes/doc, recomputing it
-    # would re-run the explode+groupBy per consumer.
-    doc_mask = tracked_persist(
-        base.select("doc_id", F.explode("arr").alias("tok"))
-        .join(F.broadcast(gids), "tok")
-        .groupBy("doc_id")
-        .agg(F.bit_or(F.expr("shiftleft(1L, gid)")).alias("m"))
-    )
-    ms = doc_mask.select("m").distinct()
-    # per-set prefix ranking, rarest-first by set-level document
-    # frequency — identical window shape to the kh branch (partitioned
-    # by set identity; never a global rank). r12: persisted — mtoks is
-    # referenced by both the dfreq aggregate and the ranking join.
-    mtoks = tracked_persist(
-        ms.select(
-            "m",
-            F.bit_count("m").alias("n"),
-            F.explode(
-                F.expr("filter(sequence(0, 63), b -> (shiftright(m, b) & 1) = 1)")
-            ).alias("gid"),
-        )
-    )
-    freq = mtoks.groupBy("gid").agg(F.count("*").alias("dfreq"))
-    pos = mtoks.join(freq, "gid").select(
-        "m",
-        "gid",
-        "n",
-        F.row_number()
-        .over(Window.partitionBy("m").orderBy("dfreq", "gid"))
-        .alias("pos"),
-    )
-    prefix_len = (
-        F.col("n")
-        - F.expr(f"({JACCARD_T_NUM} * n + {JACCARD_T_NUM}) div {JACCARD_T_DEN}")
-        + 1
-    )
-    # r12: persist — the candidate join is a SELF-join of pref (the
-    # window chain otherwise evaluates twice, guide §2.4).
-    pref = tracked_persist(
-        pos.filter(F.col("pos") <= prefix_len).select("m", "gid", "n")
-    )
-    a = pref.select(F.col("m").alias("m1"), "gid", F.col("n").alias("pn1"))
-    b = pref.select(F.col("m").alias("m2"), "gid", F.col("n").alias("pn2"))
-    cand = (
-        a.join(b, "gid")
-        .filter(
-            (F.col("m1") < F.col("m2"))
-            & (
-                JACCARD_T_DEN * F.least("pn1", "pn2")
-                >= JACCARD_T_NUM * F.greatest("pn1", "pn2")
-            )
-        )
-        .select("m1", "m2")
-        .distinct()
-    )
-    shared = F.bit_count(F.col("m1").bitwiseAND(F.col("m2")))
-    n1, n2 = F.bit_count("m1"), F.bit_count("m2")
-    jac = cand.select(
-        "m1", "m2", (shared / (n1 + n2 - shared)).alias("j")
-    ).filter(F.col("j") > JACCARD_THRESHOLD)
-    return jac, doc_mask
-
-
-def _mask_member_docs(doc_mask: DataFrame) -> DataFrame:
-    """(m, docs sorted-array) — one row per distinct mask with its
-    member doc list, persisted (r13): the set-level attachment joins
-    and the jaccard-1 enumeration both consume it, and docs sorted
-    ascending makes element_at(docs, 1) the group's min doc_id (the
-    sid the banding paths key on)."""
-    return tracked_persist(
-        doc_mask.groupBy("m").agg(
-            F.sort_array(F.collect_list("doc_id")).alias("docs")
-        )
-    )
-
-
-def _expand_mask_pairs(jac: DataFrame, mdocs: DataFrame) -> DataFrame:
-    """(m1, m2, j) surviving mask pairs → (d1, d2, jaccard) doc pairs —
-    the mask64 twin of :func:`_expand_set_pairs` (r13, VERDICT item 4):
-    member lists attach at DISTINCT-MASK cardinality and the
-    output-proportional fan-out is an in-JVM explode, so no join ever
-    shuffles pair-proportional volume; jaccard-1 pairs enumerate from
-    each mask's sorted member list instead of a doc-level self-join."""
-    cross = _cross_explode(
-        jac.join(
-            mdocs.select(F.col("m").alias("m1"), F.col("docs").alias("da_arr")),
-            "m1",
-        ).join(
-            mdocs.select(F.col("m").alias("m2"), F.col("docs").alias("db_arr")),
-            "m2",
-        )
-    )
-    same = mdocs.select(increasing_pairs("docs", "d1", "d2").alias("p")).select(
-        "p.d1", "p.d2", F.lit(1.0).alias("jaccard")
-    )
-    return cross.unionByName(same)
-
-
-def _jaccard_pairs_mask64(base: DataFrame, vocab: list) -> DataFrame:
-    """Doc-pair expansion of _mask64_jac (see there for the scheme):
-    surviving set-mask pairs cross-expand to member doc pairs, and
-    docs sharing one mask are the jaccard-1 pairs."""
-    jac, doc_mask = _mask64_jac(base, vocab)
-    return _expand_mask_pairs(jac, _mask_member_docs(doc_mask))
 
 
 def jaccard_set_adjacency(sets_in: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Near-dup graph at DISTINCT-SET granularity (r12, for the
-    connected-components family): returns (edges (s1, s2), membership
-    (sid, doc_id)) where sid is each distinct token set's minimum
-    member doc_id.
+    """Near-dup graph at DISTINCT-SET granularity, for the
+    connected-components ops: (edges (s1, s2), membership (sid, doc_id)),
+    sid being each distinct token set's minimum member doc_id.
 
-    Components over the expanded doc-pair graph == expand(components
-    over this set graph): docs sharing a set are one node (their
-    mutual jaccard-1 pairs add nothing), and a cross-set doc pair
-    survives the threshold iff its SET pair does — so cluster labels
-    (min doc_id per component = min sid per set-component) transfer
-    exactly through membership. The iterative loops then run on
-    |distinct sets| nodes and set-level edges instead of the
-    group-size-quadratic doc-pair expansion (~2.5 M doc pairs vs ~4 k
-    sets at sf0.1) — the guide-§8 "decide on lightweight proxies,
-    expand once at the end" shape."""
-    probe = (
-        sets_in.select(F.explode("arr").alias("tok"))
-        .distinct()
-        .limit(JACCARD_BITMAP_MAX_VOCAB + 1)
-        .collect()
-    )
-    vocab = sorted(r[0] for r in probe)
-    if len(vocab) <= 64:
-        jac, doc_mask = _mask64_jac(sets_in, vocab)
+    Components over the doc-pair graph == components over this set
+    graph, expanded: docs sharing a set are one node (their mutual
+    jaccard-1 pairs add nothing), and a cross-set doc pair survives the
+    threshold iff its set pair does, so the labels (min doc_id per
+    component = min sid per set component) transfer through membership.
+    The mask branch derives sid and membership from the per-doc masks,
+    which keeps its plan free of the member-list groups."""
+    key, jac, groups, _, doc_mask = _set_jaccard(sets_in)
+    if doc_mask is None:
+        sm = groups.select("kh", "sid")
+        memb = groups.select("sid", F.explode("docs").alias("doc_id"))
+    else:
         sm = doc_mask.groupBy("m").agg(F.min("doc_id").alias("sid"))
         memb = doc_mask.join(sm, "m").select("sid", "doc_id")
-        edges = (
-            jac.join(
-                sm.select(F.col("m").alias("m1"), F.col("sid").alias("s1")), "m1"
-            )
-            .join(
-                sm.select(F.col("m").alias("m2"), F.col("sid").alias("s2")), "m2"
-            )
-            .select("s1", "s2")
-        )
-        return edges, memb
-    grp = _keyed_set_groups(sets_in)
-    gs = grp.select("kh", "arr", "n")
-    cand = _allpairs_candidates(gs)
-    if len(vocab) <= JACCARD_BITMAP_MAX_VOCAB:
-        jac = _jaccard_verify_bitmap(cand, gs, vocab)
-    else:
-        jac = _jaccard_verify_arrays(cand, gs)
-    memb = grp.select("sid", F.explode("docs").alias("doc_id"))
     edges = (
         jac.join(
-            grp.select(F.col("kh").alias("kh1"), F.col("sid").alias("s1")), "kh1"
+            sm.select(F.col(key).alias(f"{key}1"), F.col("sid").alias("s1")),
+            f"{key}1",
         )
         .join(
-            grp.select(F.col("kh").alias("kh2"), F.col("sid").alias("s2")), "kh2"
+            sm.select(F.col(key).alias(f"{key}2"), F.col("sid").alias("s2")),
+            f"{key}2",
         )
         .select("s1", "s2")
     )
@@ -819,184 +619,80 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_pairs(_doc_token_sets(spark, sf_dir))
 
 
-def _set_groups(sets_in: DataFrame) -> DataFrame:
-    """(sid, arr, docs) — ONE row per DISTINCT token set: sid is the
-    smallest member doc_id, docs the sorted member list.
-
-    SET-COLLAPSE (round 9, the near_jaccard bitmap-branch lesson
-    generalized): every MinHash signature, band hash, and exact-jaccard
-    verdict is a function of the token SET alone, so documents with
-    identical sets are interchangeable everywhere downstream — band,
-    verify, and threshold ONCE per distinct set, then expand back to
-    doc pairs only for the output. The groupBy key is the full sorted
-    token ARRAY (exact — unlike the '|'-joined string key, which could
-    alias two sets whose tokens contain '|'); arrays shuffle once here
-    and never again."""
-    # Round 11 (ADVICE): thin projection of _keyed_set_groups so the
-    # array-keyed set-identity logic lives in exactly one place.
-    return _keyed_set_groups(sets_in).select("sid", "arr", "docs")
-
-
 def minhash_pairs(sets_in: DataFrame) -> DataFrame:
     """Banded-MinHash near-dup pairs over a (doc_id, arr) token-set
-    frame — the scale path (see the op docstring).
+    frame: the scale path (see the op docstring).
 
-    Round-9 rewrite, second iteration (the first — set-collapse with
-    the banding join still the candidate GENERATOR — measured 628 s at
-    the 10× stress corpus because banding there emits 146 M set-level
-    candidates for 24.9 M true pairs; the staged counts are in
-    BENCH_NOTES round-9b). The output relation is
-    {pairs: band-collide ∧ jaccard > t}, and BOTH conjuncts are
-    set-level properties, so the plan may generate candidates from
-    whichever conjunct is cheaper and filter by the other:
+    The output relation is {pairs: band-collide ∧ jaccard > t}, and both
+    conjuncts are set-level properties, so the plan generates candidates
+    from the cheaper one and filters by the other. Generating from the
+    banding join measured 628 s on the 10× stress corpus (146 M
+    set-level band candidates for 24.9 M true pairs).
 
-    1. exact jaccard > t SET pairs via the AllPairs prefix machinery
-       shared with dedup_near_jaccard (``_allpairs_candidates`` + the
-       vocab-gated bitmap/array verify) — complete for the j > t
-       conjunct by the prefix theorem, and proportional to true
-       near-duplication instead of band-bucket volume;
-    2. a band-collision filter on the survivors, exact by BUCKET
+    1. :func:`_set_jaccard` gives the exact jaccard > t set pairs; the
+       prefix theorem makes them complete for that conjunct, and they
+       grow with true near-duplication, not band-bucket volume.
+    2. A band-collision filter on the survivors, exact by BUCKET
        LEADERS: per (band, bh) bucket the leader is the minimum member
        sid, and each set carries the 8-long array
-       lb[b] = leader_sid·N_BANDS + b. Two sets share a band bucket
-       ⟺ their lb arrays overlap (a leader belongs to exactly one
-       bucket per band, so equal lb values force the same (band, bh)),
-       which replaces a 32-char md5 equi-join at bucket volume with an
-       arrays_overlap over 64-byte payloads at SURVIVOR volume.
-    3. ``_expand_set_pairs`` maps surviving set pairs back to doc
-       pairs; identical-set doc pairs (jaccard exactly 1.0, band
-       hashes trivially equal) come from its same-kh branch.
+       lb[b] = leader_sid·N_BANDS + b. Two sets share a band bucket ⟺
+       their lb arrays overlap (a leader belongs to exactly one bucket
+       per band, so equal lb values force the same (band, bh)); an
+       arrays_overlap over 64-byte payloads at survivor volume replaces
+       a 32-char md5 equi-join at bucket volume.
+    3. :func:`_expand_set_pairs` maps surviving set pairs back to doc
+       pairs; identical-set doc pairs (jaccard 1.0, band hashes
+       trivially equal) come from its same-set branch.
 
-    The md5 minhash/band-hash definitions, the threshold, and the
-    DuckDB oracle are all untouched — only candidate ORDER changed,
-    and each filter is individually lossless for the output relation.
-    """
-    # bounded branch probe — plan choice + gid map only, never results
-    # (same protocol as allpairs_jaccard_pairs / dedup_ngram_jaccard)
-    probe = (
-        sets_in.select(F.explode("arr").alias("tok"))
-        .distinct()
-        .limit(JACCARD_BITMAP_MAX_VOCAB + 1)
-        .collect()
-    )
-    vocab = sorted(r[0] for r in probe)
-    # r12: V ≤ 64 collapses the whole pipeline onto BIGINT set masks
-    # (the allpairs_jaccard_pairs mask64 branch, extended with the
-    # band-leader collision filter) — same output relation, no md5
-    # keys, no array-keyed groupBy, no verify join.
-    if len(vocab) <= 64:
-        return _minhash_pairs_mask64(sets_in, vocab)
-    # set identity from the ARRAY group (_keyed_set_groups, round-10
-    # ADVICE fix — the '|'-joined md5 key aliased sets whose tokens
-    # contain '|'); grp persisted inside _keyed_set_groups (its lineage
-    # is the full corpus tokenization, round 9b). r13: the expansion
-    # consumes grp's docs arrays directly — no exploded doc relation.
-    grp = _keyed_set_groups(sets_in)
-    gs = grp.select("kh", "arr", "sid", "n")
-    cand = _allpairs_candidates(gs)
-    if len(vocab) <= JACCARD_BITMAP_MAX_VOCAB:
-        jac = _jaccard_verify_bitmap(cand, gs, vocab)
-    else:
-        jac = _jaccard_verify_arrays(cand, gs)
-    # r12: persisted — bands feeds the leader aggregate AND the lb
-    # join, so the 32-minhash computation otherwise runs twice.
-    bands = tracked_persist(
-        _band_hashes(gs, "kh").join(gs.select("kh", "sid"), "kh")
-    )
+    The md5 minhash and band-hash definitions, the threshold and the
+    DuckDB oracle are those of the op; each filter is lossless for the
+    output relation."""
+    key, jac, groups, members, _ = _set_jaccard(sets_in)
+    # a mask set bands under its sid and maps back to m; a kh set bands
+    # under kh with its sid joined on
+    bid = "sid" if key == "m" else key
+    bands = _band_hashes(groups, bid)
+    if bid != "sid":
+        bands = bands.join(groups.select(key, "sid"), key)
+    # persisted: bands feeds the leader aggregate AND the lb join, so the
+    # 32-minhash computation would otherwise run twice
+    bands = tracked_persist(bands)
     leaders = bands.groupBy("band", "bh").agg(F.min("sid").alias("lsid"))
     lbv = (
         bands.join(leaders, ["band", "bh"])
-        .groupBy("kh")
-        .agg(
-            F.collect_set(
-                F.col("lsid") * N_BANDS + F.col("band")
-            ).alias("lb")
-        )
+        .groupBy(bid)
+        .agg(F.collect_set(F.col("lsid") * N_BANDS + F.col("band")).alias("lb"))
     )
+    if bid != key:
+        lbv = groups.select(key, "sid").join(lbv, "sid").select(key, "lb")
     banded = (
         jac.join(
-            lbv.select(F.col("kh").alias("kh1"), F.col("lb").alias("lb1")),
-            "kh1",
+            lbv.select(F.col(key).alias(f"{key}1"), F.col("lb").alias("lb1")),
+            f"{key}1",
         )
         .join(
-            lbv.select(F.col("kh").alias("kh2"), F.col("lb").alias("lb2")),
-            "kh2",
+            lbv.select(F.col(key).alias(f"{key}2"), F.col("lb").alias("lb2")),
+            f"{key}2",
         )
         .filter(F.arrays_overlap("lb1", "lb2"))
-        .select("kh1", "kh2", "j")
+        .select(f"{key}1", f"{key}2", "j")
     )
-    return _expand_set_pairs(banded, grp.select("kh", "docs"))
-
-
-def _minhash_pairs_mask64(sets_in: DataFrame, vocab: list) -> DataFrame:
-    """minhash_pairs for V ≤ 64 vocabularies (r12): the exact-jaccard
-    conjunct comes from ``_mask64_jac`` (token sets as BIGINT masks,
-    inline bit_count verify — the allpairs_jaccard_pairs fast branch),
-    and the band-collision conjunct is the same bucket-leader filter as
-    the generic path, computed over the DISTINCT-mask representatives
-    (arr rebuilt from the mask bits via the probe's vocab, so the 32
-    md5 permutation-minima and the 8 band hashes are byte-identical to
-    the oracle's). Set identity for banding/leaders is min member
-    doc_id per mask — the same sid the generic path derives per
-    distinct array, since mask ↔ token set is bijective under the
-    probe's dense gid map. Output relation therefore matches the
-    generic path row for row; only representation changes."""
-    jac, doc_mask = _mask64_jac(sets_in, vocab)
-    # r13: one persisted (m, sorted member docs) relation serves the
-    # sid map (element_at(docs, 1) == min member), both attachment
-    # joins and the jaccard-1 enumeration — replacing the separate
-    # min-aggregate persist plus doc-cardinality expansion joins.
-    mdocs = _mask_member_docs(doc_mask)
-    sm = mdocs.select("m", F.element_at("docs", 1).alias("sid"))
-    varr = F.array(*[F.lit(t) for t in vocab])
-    reps = sm.withColumn("varr", varr).select(
-        "sid",
-        F.expr(
-            "transform(filter(sequence(0, 63),"
-            " b -> (shiftright(m, b) & 1) = 1),"
-            " b -> element_at(varr, b + 1))"
-        ).alias("arr"),
-        "m",
-    )
-    # persisted — bands feeds the leader aggregate AND the lb join
-    bands = tracked_persist(_band_hashes(reps, "sid"))
-    leaders = bands.groupBy("band", "bh").agg(F.min("sid").alias("lsid"))
-    lbv = (
-        bands.join(leaders, ["band", "bh"])
-        .groupBy("sid")
-        .agg(
-            F.collect_set(
-                F.col("lsid") * N_BANDS + F.col("band")
-            ).alias("lb")
-        )
-    )
-    mlb = sm.join(lbv, "sid").select("m", "lb")
-    banded = (
-        jac.join(
-            mlb.select(F.col("m").alias("m1"), F.col("lb").alias("lb1")), "m1"
-        )
-        .join(
-            mlb.select(F.col("m").alias("m2"), F.col("lb").alias("lb2")), "m2"
-        )
-        .filter(F.arrays_overlap("lb1", "lb2"))
-        .select("m1", "m2", "j")
-    )
-    return _expand_mask_pairs(banded, mdocs)
+    return _expand_set_pairs(banded, members, key)
 
 
 def minhash_candidates(sets_in: DataFrame) -> DataFrame:
-    """Doc-level LSH banding candidates of ``minhash_pairs``, exposed
-    (round-7 verdict item 3) so the sf1 scale stress can measure
-    CANDIDATE volume separately from verified pairs. Round 9: computed
-    as set-level banding + member expansion — the SAME relation as the
-    r8 doc-level banding join (identical sets share all 8 band hashes,
-    so same-set member pairs are always candidates, and cross-set
-    candidacy depends only on set content), without materializing the
-    band join at doc cardinality. No final dropDuplicates is needed:
-    set-level candidates are distinct, each doc belongs to exactly one
-    set group (so a doc pair expands from exactly one set pair), and
-    the same-set/cross-set unions are disjoint by construction."""
-    grp = _set_groups(sets_in)
+    """Doc-level LSH banding candidates of ``minhash_pairs``, exposed so
+    the scale stress can measure CANDIDATE volume separately from
+    verified pairs. Computed as set-level banding + member expansion:
+    the same relation as a doc-level banding join (identical sets share
+    all 8 band hashes, so same-set member pairs are always candidates,
+    and cross-set candidacy depends only on set content), without
+    materializing the band join at doc cardinality. No final
+    dropDuplicates is needed: set-level candidates are distinct, each
+    doc belongs to exactly one set group (so a doc pair expands from
+    exactly one set pair), and the same-set/cross-set unions are
+    disjoint by construction."""
+    grp = _keyed_set_groups(sets_in)
     reps = grp.select(F.col("sid").alias("doc_id"), "arr")
     cand = _band_candidates(reps)
     members = grp.select("sid", F.explode("docs").alias("m"))
@@ -1075,9 +771,9 @@ def _band_hashes(sets_in: DataFrame, id_col: str = "doc_id") -> DataFrame:
 def _band_candidates(sets_in: DataFrame) -> DataFrame:
     """The raw banded-MinHash candidate join over a (doc_id, arr)
     frame: equi-join of ``_band_hashes`` with itself on
-    (band, band-hash), distinct (d1 < d2) pairs. Since round 9 this
-    runs over set-group representatives (|distinct sets| rows), never
-    the full corpus — see ``_set_groups``."""
+    (band, band-hash), distinct (d1 < d2) pairs. Callers pass one
+    representative per distinct set (``_keyed_set_groups``), never the
+    full corpus."""
     bands = _band_hashes(sets_in.select("doc_id", "arr"))
     l, r = bands.alias("l"), bands.alias("r")
     return (

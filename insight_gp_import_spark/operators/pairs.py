@@ -10,6 +10,10 @@ registers no ops.
 - :func:`hash_blocks` groups vectors into hash-assigned GEMM blocks.
 - :func:`cosine_self_pairs` scores every unordered vector pair of a
   frame with one float64 GEMM per block pair.
+- :func:`bounded_vocab`, :func:`join_gids`, :func:`set_bitmaps` and
+  :func:`bitmap_overlap` are the set-similarity representation steps:
+  one bounded vocabulary probe, the dense token-id map, and the
+  fixed-width bitmap whose popcount(AND) is the exact intersection size.
 """
 
 from __future__ import annotations
@@ -17,7 +21,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from insight_gp_import_spark.registry import tracked_persist
 from insight_gp_import_spark.tables import load_table, spread_scan
+
+# Largest vocabulary whose sets verify as fixed-width bitmaps: a set's
+# bitmap costs ceil(V/64) longs against one value per distinct token, so
+# bitmaps win while V/64 is below the typical set size; 16384 caps a
+# bitmap at 256 longs (2 KB). Character-n-gram spaces sit far under it;
+# word or shingle vocabularies pass it and keep their token arrays.
+BITMAP_MAX_VOCAB = 16384
 
 
 def increasing_pairs(arr: str, a: str, b: str) -> Column:
@@ -155,3 +167,61 @@ def cosine_self_pairs(emb: DataFrame, per_block: int, t: float, score) -> DataFr
                 )
 
     return bp.mapInPandas(tiles, "v1 long, v2 long, sim double")
+
+
+def bounded_vocab(col_df: DataFrame) -> list | None:
+    """The sorted distinct values of a one-column frame, or None when
+    there are more than :data:`BITMAP_MAX_VOCAB` of them.
+
+    One job collects at most cap + 1 values, so the driver state is
+    bounded by construction; past the cap only the overflow is used. The
+    result picks a set representation and feeds :func:`join_gids`, never
+    a result value. The cap is read at call time."""
+    rows = col_df.distinct().limit(BITMAP_MAX_VOCAB + 1).collect()
+    if len(rows) > BITMAP_MAX_VOCAB:
+        return None
+    return sorted(r[0] for r in rows)
+
+
+def join_gids(rel: DataFrame, tok: str, vocab: list) -> DataFrame:
+    """``rel`` with a ``gid`` column: each ``tok`` value's position in
+    the sorted ``vocab``, joined from a broadcast driver-side map.
+
+    Ids are dense and unique, so a set of gids packs injectively into
+    bits. The map is never a row_number over the distinct tokens: that
+    is an un-partitioned window, a SinglePartition exchange that the
+    dedup plan guard forbids."""
+    gids = rel.sparkSession.createDataFrame(
+        [(t, i) for i, t in enumerate(vocab)], f"{tok} string, gid int"
+    )
+    return rel.join(F.broadcast(gids), tok)
+
+
+def set_bitmaps(rel: DataFrame, keys: list[str], tok: str, vocab: list) -> DataFrame:
+    """(keys..., bm), persisted: per ``keys`` group of the (keys, tok)
+    rows of ``rel``, a bitmap of ceil(V/64) longs with bit gid set for
+    every token. Both sides of a verify join read it, and Spark does not
+    reuse the group+pack subtree between them."""
+    nwords = (len(vocab) + 63) // 64
+    return tracked_persist(
+        join_gids(rel, tok, vocab)
+        .groupBy(*keys)
+        .agg(F.collect_set("gid").alias("gidset"))
+        .select(
+            *keys,
+            F.expr(
+                f"transform(sequence(0, {nwords - 1}), w -> aggregate("
+                "filter(gidset, x -> CAST(x div 64 AS INT) = w), 0L,"
+                " (acc, x) -> acc | shiftleft(1L, CAST(x % 64 AS INT))))"
+            ).alias("bm"),
+        )
+    )
+
+
+def bitmap_overlap(a: str, b: str) -> Column:
+    """|A ∩ B| of two :func:`set_bitmaps` bitmaps: Σ popcount(a & b).
+    Bit-exact, because a token owns exactly one bit of one word."""
+    return F.expr(
+        f"aggregate(zip_with({a}, {b}, (x, y) -> bit_count(x & y)),"
+        " 0, (a, b) -> a + b)"
+    )

@@ -21,14 +21,14 @@ from __future__ import annotations
 import gzip
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from insight_gp_import_spark.registry import op, tracked_persist
+from insight_gp_import_spark.registry import op
+from insight_gp_import_spark.scratch import scratch_dir
 from insight_gp_import_spark.tables import load_table
 
 CAT = "scans"
@@ -66,6 +66,8 @@ def scan_events_ns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CSV_GOOD_ROWS = 8
+# a malformed line parses to nulls, with its raw text in _bad
+TOLERANT = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_bad"}
 
 
 @op(
@@ -97,31 +99,22 @@ def scan_csv_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
     file = one task. At 100 TB the staging layout must therefore be
     many-files-per-batch (as a gpfdist-style loader produces anyway);
     a single giant .gz would serialize the whole parse."""
-    tmp = tempfile.mkdtemp(prefix="igis-csv-")
+    tmp = scratch_dir("igis-csv-")
     path = os.path.join(tmp, "batch.csv.gz")
     lines = [f"{i},name_{i},{i * 10}" for i in range(CSV_GOOD_ROWS)]
     lines.insert(3, "not_an_int,oops,nope")  # type-malformed
     lines.insert(6, "5,missing_value")  # arity-malformed (short row)
     with gzip.open(path, "wt") as fh:
         fh.write("\n".join(lines) + "\n")
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("amount", T.LongType()),
-            T.StructField("_bad", T.StringType()),
-        ]
+    # parsed from the text lines, not by the csv file source: that source
+    # rejects a plan whose only column read is the corrupt-record one,
+    # which a count() over the _bad filter prunes down to
+    raw = spark.read.text(path).select(
+        F.from_csv(
+            "value", "id BIGINT, name STRING, amount BIGINT, _bad STRING", TOLERANT
+        ).alias("r")
     )
-    # cache before filtering on _bad: Spark disallows plans whose only
-    # referenced column is the internal corrupt-record column (a count()
-    # over the filter would prune down to exactly that), and caching the
-    # parsed batch is the documented workaround.
-    raw = tracked_persist(
-        spark.read.csv(
-            path, schema=schema, mode="PERMISSIVE", columnNameOfCorruptRecord="_bad"
-        )
-    )
-    return raw.filter(F.col("_bad").isNull()).select("id", "name", "amount")
+    return raw.filter(F.col("r._bad").isNull()).select("r.id", "r.name", "r.amount")
 
 
 @op(
@@ -142,7 +135,7 @@ def scan_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracled (round 4; previously rows-only): same closed-form-fixture
     law as scan_csv_tolerant — the parse must yield exactly the ten
     good log lines and quarantine the one broken one."""
-    tmp = tempfile.mkdtemp(prefix="igis-jsonl-")
+    tmp = scratch_dir("igis-jsonl-")
     path = os.path.join(tmp, "logs.jsonl")
     lines = [
         f'{{"req_id": {i}, "status": {200 + (i % 3) * 100}, "latency_ms": {i * 7 % 90}}}'
@@ -151,21 +144,16 @@ def scan_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines.insert(4, "{this is not json")
     with open(path, "w") as fh:
         fh.write("\n".join(lines) + "\n")
-    schema = T.StructType(
-        [
-            T.StructField("req_id", T.LongType()),
-            T.StructField("status", T.LongType()),
-            T.StructField("latency_ms", T.LongType()),
-            T.StructField("_bad", T.StringType()),
-        ]
+    # parsed from the text lines, as in scan_csv_tolerant
+    raw = spark.read.text(path).select(
+        F.from_json(
+            "value", "req_id BIGINT, status BIGINT, latency_ms BIGINT, _bad STRING",
+            TOLERANT,
+        ).alias("r")
     )
-    # cache: same corrupt-record-column pruning restriction as the CSV op
-    raw = tracked_persist(
-        spark.read.json(
-            path, schema=schema, mode="PERMISSIVE", columnNameOfCorruptRecord="_bad"
-        )
+    return raw.filter(F.col("r._bad").isNull()).select(
+        "r.req_id", "r.status", "r.latency_ms"
     )
-    return raw.filter(F.col("_bad").isNull()).select("req_id", "status", "latency_ms")
 
 
 @op(
@@ -189,7 +177,7 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     a pure fact of ``events`` — if the sink dropped, duplicated, or
     mis-partitioned any row, per-day counts or distinct ids diverge
     from the source relation and the hash fails."""
-    out = tempfile.mkdtemp(prefix="igis-sink-")
+    out = scratch_dir("igis-sink-")
     ev = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.to_date("ts")
     )
@@ -360,7 +348,7 @@ def sink_parquet_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib as _h
 
     tag = _h.md5(sf_dir.encode()).hexdigest()[:8]
-    warehouse = tempfile.mkdtemp(prefix="igis-bucketed-")
+    warehouse = scratch_dir("igis-bucketed-")
     t_orders, t_lineitem = f"igis_orders_b_{tag}", f"igis_lineitem_b_{tag}"
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
@@ -433,7 +421,7 @@ def sink_jdbc_gp(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_jdbc,
     )
 
-    db = tempfile.mkdtemp(prefix="igis-jdbc-") + "/db"
+    db = scratch_dir("igis-jdbc-") + "/db"
     cfg = JdbcSinkConfig(
         url=f"jdbc:derby:{db};create=true",
         table="customer_load",
@@ -488,8 +476,8 @@ def maintenance_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash. The fs-measured values are returned, the oracle states the
     law.
     """
-    src = tempfile.mkdtemp(prefix="igis-compact-src-")
-    dst = tempfile.mkdtemp(prefix="igis-compact-dst-")
+    src = scratch_dir("igis-compact-src-")
+    dst = scratch_dir("igis-compact-dst-")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -537,7 +525,7 @@ def pipeline_batch_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale each stage stays distributed: CSV parse is per-file
     parallel, the manifest anti-join broadcasts (manifests are tiny),
     and the final agg is the only shuffle."""
-    stage = tempfile.mkdtemp(prefix="igis-stage-")
+    stage = scratch_dir("igis-stage-")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     ).withColumn("batch_id", F.pmod(F.col("event_id"), F.lit(N_BATCHES)))
@@ -623,7 +611,7 @@ def pipeline_file_lifecycle(
     ops driven by the collected accounting — directory renames on a
     real filesystem, manifest pointer swaps on object stores.
     """
-    root = root or tempfile.mkdtemp(prefix="igis-lifecycle-")
+    root = root or scratch_dir("igis-lifecycle-")
     incoming, archive, errdir = (os.path.join(root, d) for d in
                                  ("incoming", "archive", "error"))
     processed = os.path.join(root, "processed")
@@ -826,7 +814,7 @@ def sink_parquet_range_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     source facts — a lost range file, an overlap (sort regression),
     or dropped rows each flip a measured value and fail the hash.
     """
-    out = tempfile.mkdtemp(prefix="igis-rangesort-")
+    out = scratch_dir("igis-rangesort-")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_shipdate", "l_quantity"
     )
@@ -895,7 +883,7 @@ def sink_partition_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFr
     truncated) or a non-replacing append flips a measured value and
     fails the hash.
     """
-    out = tempfile.mkdtemp(prefix="igis-dynover-")
+    out = scratch_dir("igis-dynover-")
     ev = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.to_date("ts").cast("string")
     )
@@ -1054,11 +1042,11 @@ def sink_parquet_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     # work here, results are a deterministic function of the data).
     from concurrent.futures import ThreadPoolExecutor
 
-    out_z = tempfile.mkdtemp(prefix="igis-zorder-")
+    out_z = scratch_dir("igis-zorder-")
     lbucket = F.expr(
         f"((cast(l_partkey as bigint) - {mnx}) * {ZORDER_FILES}) div {dx}"
     )
-    out_lin = tempfile.mkdtemp(prefix="igis-linsort-")
+    out_lin = scratch_dir("igis-linsort-")
     with ThreadPoolExecutor(max_workers=2) as pool:
         fz = pool.submit(
             write_and_measure,
@@ -1098,7 +1086,7 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     sibling; its external spark-avro module is not deployed in this
     environment, so ORC carries the format-breadth demonstration.)
     """
-    out = tempfile.mkdtemp(prefix="igis-orc-")
+    out = scratch_dir("igis-orc-")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1139,7 +1127,7 @@ def schema_evolution_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tag = _h.md5(sf_dir.encode()).hexdigest()[:8]
     tbl = f"igis_docs_evolve_{tag}"
-    path = os.path.join(tempfile.mkdtemp(prefix="igis-evolve-"), "t")
+    path = os.path.join(scratch_dir("igis-evolve-"), "t")
     docs = load_table(spark, sf_dir, "documents")
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     (
@@ -1194,7 +1182,7 @@ def merge_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(delta); the close-out join touches history rows only for keys in
     the delta (broadcast — a day's key set is small next to history).
     """
-    hist_dir = tempfile.mkdtemp(prefix="igis-scd2-hist-")
+    hist_dir = scratch_dir("igis-scd2-hist-")
     orders = load_table(spark, sf_dir, "orders")
     cutoff = F.lit(SCD2_CUTOFF).cast("timestamp")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
@@ -1265,7 +1253,7 @@ def sink_csv_gz_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is why the writer keeps the source partitioning instead of
     coalescing to one giant unsplittable .gz).
     """
-    out = tempfile.mkdtemp(prefix="igis-csvgz-")
+    out = scratch_dir("igis-csvgz-")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -1325,7 +1313,7 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .collect()
     )
-    tmp = tempfile.mkdtemp(prefix="igis-binscan-")
+    tmp = scratch_dir("igis-binscan-")
     for r in docs:
         with open(f"{tmp}/{r.doc_id:05d}.bin", "wb") as fh:
             fh.write(r.text.encode("utf-8"))
@@ -1431,7 +1419,7 @@ def scan_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value") * 10000).cast("bigint").alias("value_e4"),
         )
     )
-    out = tempfile.mkdtemp(prefix="igis-xml-") + "/events_xml"
+    out = scratch_dir("igis-xml-") + "/events_xml"
     ev.write.format("xml").option("rowTag", "event").mode("overwrite").save(out)
     back = (
         spark.read.format("xml")
@@ -1476,7 +1464,7 @@ def scan_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path scales like CSV without the quoting machinery — which is
     exactly why raw-log ingest uses it.
     """
-    out = tempfile.mkdtemp(prefix="igis-text-")
+    out = scratch_dir("igis-text-")
     docs = load_table(spark, sf_dir, "documents")
     line = F.concat_ws(
         "\t",
@@ -1536,7 +1524,7 @@ def scan_csv_multiline_quoted(spark: SparkSession, sf_dir: str) -> DataFrame:
     roundtrip's tab-framing) — both conventions now exist in-repo
     with their trade-offs stated.
     """
-    out = tempfile.mkdtemp(prefix="igis-mlcsv-")
+    out = scratch_dir("igis-mlcsv-")
     docs = load_table(spark, sf_dir, "documents")
     ml = docs.select(
         "doc_id",
@@ -1601,7 +1589,7 @@ def scan_partitioned_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     century of data) — the partition-explosion guardrail per-day
     layouts violate at fact scale.
     """
-    out = tempfile.mkdtemp(prefix="igis-part-")
+    out = scratch_dir("igis-part-")
     orders = load_table(spark, sf_dir, "orders")
     orders.select(
         "o_orderkey",
@@ -1665,7 +1653,7 @@ def scan_csv_corrupt_rescue(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoration). Distributed parse, one small agg; value sums in
     exact cents over the good rows only.
     """
-    tmp = tempfile.mkdtemp(prefix="igis-rescue-")
+    tmp = scratch_dir("igis-rescue-")
     orders = load_table(spark, sf_dir, "orders")
     line = F.when(
         F.col("o_orderkey") % 37 == 0,
@@ -1761,7 +1749,7 @@ def sink_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     while parquet remains the processing format (the round trip is
     exactly that boundary).
     """
-    out = tempfile.mkdtemp(prefix="igis-jsonl-")
+    out = scratch_dir("igis-jsonl-")
     docs = load_table(spark, sf_dir, "documents")
     docs.write.mode("overwrite").json(out)
     back = spark.read.json(out, schema=docs.schema)
@@ -1800,7 +1788,7 @@ def scan_recursive_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is why real lakes front this with a manifest; ingest_manifest_
     dedup is that next step).
     """
-    base = tempfile.mkdtemp(prefix="igis-recur-")
+    base = scratch_dir("igis-recur-")
     orders = load_table(spark, sf_dir, "orders")
     slices = [
         ("P", os.path.join(base, "teamA", "2024")),
@@ -1847,7 +1835,7 @@ def scan_glob_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet bytes under a junk name: a suffix-trusting reader would
     double-count, which is exactly what the hash would catch.
     """
-    base = tempfile.mkdtemp(prefix="igis-glob-")
+    base = scratch_dir("igis-glob-")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
     )
@@ -1960,7 +1948,7 @@ def scan_modified_after(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
 
     docs = load_table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="igis-mtime-")
+    base = scratch_dir("igis-mtime-")
     old_dir, new_dir = f"{base}/batch=old", f"{base}/batch=new"
     docs.filter(F.col("doc_id") % 2 == 0).write.mode("overwrite").parquet(old_dir)
     docs.filter(F.col("doc_id") % 2 == 1).write.mode("overwrite").parquet(new_dir)
@@ -2017,7 +2005,7 @@ def sink_parquet_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup is map-combined.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    out = tempfile.mkdtemp(prefix="igis-zstd-")
+    out = scratch_dir("igis-zstd-")
     li.write.mode("overwrite").option("compression", "zstd").parquet(out)
     names = [f for f in os.listdir(out) if f.endswith(".parquet")]
     if not any(".zstd." in f for f in names):
@@ -2076,7 +2064,7 @@ def scan_csv_null_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("lang"),
         F.when(F.col("doc_id") % 7 == 0, 1).otherwise(0).alias("was_nulled"),
     )
-    out = tempfile.mkdtemp(prefix="igis-csvnull-")
+    out = scratch_dir("igis-csvnull-")
     (
         staged.write.mode("overwrite")
         .option("header", "true")
@@ -2124,7 +2112,7 @@ def scan_ignore_corrupt_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer-parse failure, logged and skipped.
     """
     src = load_table(spark, sf_dir, "documents")
-    staged = tempfile.mkdtemp(prefix="igis-corrupt-")
+    staged = scratch_dir("igis-corrupt-")
     src.write.mode("overwrite").parquet(staged)
     with open(os.path.join(staged, "part-torn-write.parquet"), "wb") as fh:
         fh.write(b"PAR1 this is not a parquet footer / torn upload \x00\xff")
@@ -2193,7 +2181,7 @@ def scan_wholetext_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert (
         docs.filter(F.col("text").contains("\n")).limit(1).count() == 0
     ), "scan_wholetext_files: corpus gained multiline docs; the \\n-join law no longer holds"
-    base = tempfile.mkdtemp(prefix="igis-wholetext-")
+    base = scratch_dir("igis-wholetext-")
     (
         docs.select("source", "doc_id", F.col("text").alias("value"))
         .repartition("source")
@@ -2265,7 +2253,7 @@ def scan_parquet_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
-    root = tempfile.mkdtemp(prefix="igis-merge-")
+    root = scratch_dir("igis-merge-")
     ev.filter(F.col("event_id") % 2 == 0).select("event_id", "user_id").write.parquet(
         f"{root}/gen=legacy"
     )
@@ -2325,7 +2313,7 @@ def scan_csv_multichar_delimiter(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-fails. Schema is explicit (inference over exotic delimiters
     is the classic silent-string-everything trap, documented).
     """
-    tmp = tempfile.mkdtemp(prefix="igis-mcsv-")
+    tmp = scratch_dir("igis-mcsv-")
     path = os.path.join(tmp, "export.csv")
     lines = [
         MCSV_SEP.join([str(i), f"desc_{i}, with | pipe", str(i * 7)])

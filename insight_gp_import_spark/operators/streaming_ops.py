@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from insight_gp_import_spark.registry import op
+from insight_gp_import_spark.scratch import scratch_dir
 from insight_gp_import_spark.tables import load_table, shuffle_width
 
 CAT = "streaming"
@@ -52,9 +53,9 @@ def _stage_events_files(spark: SparkSession, sf_dir: str, splits: int = 3) -> st
     call). repartition(1) keeps exactly one file per split value; row
     order within a staged file is immaterial — every consumer
     aggregates or dedups by unique event_id (checked r12)."""
-    tmp = tempfile.mkdtemp(prefix="igis-stage-")
+    tmp = scratch_dir("igis-stage-")
     ev = load_table(spark, sf_dir, "events")
-    flat = tempfile.mkdtemp(prefix="igis-stage-flat-")
+    flat = scratch_dir("igis-stage-flat-")
     (
         ev.withColumn("_b", F.col("event_id") % splits)
         .repartition(1)
@@ -344,7 +345,7 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     from insight_gp_import_spark.streaming import read_events_stream, run_to_memory
 
     ev = load_table(spark, sf_dir, "events")
-    src = tempfile.mkdtemp(prefix="igis-late-op-")
+    src = scratch_dir("igis-late-op-")
     jan8 = F.lit("2024-01-08").cast("timestamp")
     jan15 = F.lit("2024-01-15").cast("timestamp")
     now = time.time()
@@ -492,9 +493,9 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     staged = _stage_events_files(spark, sf_dir)
     files = sorted(Path(staged).glob("*.parquet"))
-    src = tempfile.mkdtemp(prefix="igis-restart-src-")
-    out = tempfile.mkdtemp(prefix="igis-restart-out-")
-    ckpt = tempfile.mkdtemp(prefix="igis-restart-ckpt-")
+    src = scratch_dir("igis-restart-src-")
+    out = scratch_dir("igis-restart-out-")
+    ckpt = scratch_dir("igis-restart-ckpt-")
 
     def run_to_sink() -> None:
         q = (

@@ -35,7 +35,12 @@ from insight_gp_import_spark.operators.llm import (
     _norm,
     char_trigram_zip_expr,
 )
-from insight_gp_import_spark.operators.pairs import cosine_self_pairs
+from insight_gp_import_spark.operators.pairs import (
+    bitmap_overlap,
+    bounded_vocab,
+    cosine_self_pairs,
+    set_bitmaps,
+)
 from insight_gp_import_spark.registry import op, tracked_persist
 from insight_gp_import_spark.tables import load_table, shuffle_width, spread_scan
 
@@ -465,12 +470,6 @@ NGRAM_T_NUM, NGRAM_T_DEN = 9, 10
 # task-level distribution)
 NGRAM_SPLIT_GRAMS = 4096
 NGRAM_VERIFY_BANDS = 16
-# bitmap verify cutover: a doc's bitmap costs ceil(V/64) longs vs one
-# long per distinct gram, so bitmaps win whenever V/64 is below the
-# typical set size; 16384 caps the bitmap at 256 longs (2 KB)/doc.
-# Character-n-gram spaces sit far under this; word/shingle vocabularies
-# blow past it and take the routed-array branch.
-NGRAM_BITMAP_MAX_VOCAB = 16384
 
 
 @op(
@@ -532,55 +531,43 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     into one proportional to true near-duplication.
     """
     cand, gd = ngram_candidates(spark, sf_dir)
-    # VERIFICATION (r8 verdict item 3, measured iteratively). The r7
-    # single-array verify (collect_set per doc + one array_intersect
-    # per candidate pair) was diagnosed as giant-pair compute skew;
-    # measuring showed the real wall is shuffle VOLUME — this corpus
-    # yields 129M candidate pairs at the 10x SF, each carrying two
-    # gram-set arrays through the verify join, and the spill is what
-    # bounded (and once out-of-disked) the run. The verify
-    # representation is therefore chosen by a measured statistic:
+    # VERIFICATION. Measured on the 10x corpus (129 M candidate pairs),
+    # the wall is shuffle VOLUME: each candidate carries two gram sets
+    # through the verify join. One bounded vocabulary probe (plan
+    # choice only, never results) picks the representation:
     #
-    # - SMALL VOCABULARY (n_vocab <= NGRAM_BITMAP_MAX_VOCAB): encode
-    #   each doc's gram set as a FIXED-WIDTH bitmap over dense gram
-    #   ids (ceil(V/64) longs — 11 words at the 10x stress corpus's
-    #   V=648 vs ~1.7 KB packed-gram arrays), and verify with
-    #   popcount(AND): ~20x less shuffle and O(V/64) per pair instead
-    #   of an array_intersect hash build. Bitmaps also make doc size
-    #   irrelevant, so no giant-pair routing is needed in this branch.
-    # - LARGE VOCABULARY (real text corpora — word/shingle spaces):
-    #   bitmaps would dwarf the sets, so keep packed-gram arrays and
-    #   SIZE-ROUTE: pairs whose smaller side <= NGRAM_SPLIT_GRAMS use
-    #   the one-row verify; giant pairs split into NGRAM_VERIFY_BANDS
-    #   hash-banded partial intersections whose integer sum is the
-    #   exact intersection (band-parallel rows instead of one
-    #   mega-task — the skew AQE cannot split because it is row-level,
-    #   not partition-level).
+    # - SMALL VOCABULARY (V <= pairs.BITMAP_MAX_VOCAB): each doc's gram
+    #   set becomes a fixed-width bitmap (ceil(V/64) longs, 11 words at
+    #   the 10x corpus's V=648 against ~1.7 KB gram arrays), verified by
+    #   popcount(AND): ~20x less shuffle, O(V/64) per pair, and doc size
+    #   no longer matters, so no giant-pair routing is needed.
+    # - LARGE VOCABULARY (word/shingle spaces): bitmaps would dwarf the
+    #   sets, so keep packed-gram arrays and SIZE-ROUTE giant pairs into
+    #   hash-banded partial intersections (_ngram_verify_routed).
     #
-    # Both branches compute the identical exact `shared`; the oracle
-    # is untouched. The branch is decided by a bounded driver probe
-    # (the same bounded-driver-state class as the k-means centroids)
-    # used only for PLAN CHOICE, never for results.
-    # ids + sizes only; persisted because the verify (and in the
-    # routed branch BOTH its halves) consumes it — without the persist
-    # each consumer recomputes the whole AllPairs candidate join
-    # (measured: 2x verify wall at 1x SF). Four bigints per candidate
-    # pair, the same id-only-materialization precedent as
-    # dedup_phash_hamming's persisted quarter table. Sizes ride along
-    # from the candidate aggregate itself (round 9) — no size joins at
-    # candidate cardinality.
+    # Both compute the identical exact `shared`. cs (ids + sizes only)
+    # is persisted because the verify, and in the routed branch both its
+    # halves, consume it; without it each consumer recomputes the whole
+    # AllPairs candidate join (measured 2x verify wall at 1x SF).
     cs = tracked_persist(cand)
-    # one bounded probe decides the branch AND feeds the gid mapping:
-    # collecting at most MAX_VOCAB+1 distinct grams is bounded driver
-    # state by construction; overflow means "large vocabulary", where
-    # only the probe's existence (never its content) is used.
-    probe = (
-        gd.select("g").distinct().limit(NGRAM_BITMAP_MAX_VOCAB + 1).collect()
-    )
-    if len(probe) <= NGRAM_BITMAP_MAX_VOCAB:
-        verified = _ngram_verify_bitmap(cs, gd, sorted(r[0] for r in probe))
-    else:
+    vocab = bounded_vocab(gd.select("g"))
+    if vocab is None:
         verified = _ngram_verify_routed(cs, gd)
+    else:
+        bm = set_bitmaps(gd, ["doc_id"], "g", vocab)
+        b1 = bm.select(F.col("doc_id").alias("d1"), F.col("bm").alias("bm1"))
+        b2 = bm.select(F.col("doc_id").alias("d2"), F.col("bm").alias("bm2"))
+        verified = (
+            cs.join(b1, "d1")
+            .join(b2, "d2")
+            .select(
+                "d1",
+                "d2",
+                "n1",
+                "n2",
+                bitmap_overlap("bm1", "bm2").cast("bigint").alias("shared"),
+            )
+        )
     union = F.col("n1") + F.col("n2") - F.col("shared")
     return (
         verified.withColumn("union_n", union)
@@ -589,64 +576,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             "d1",
             "d2",
             F.round(F.col("shared") / F.col("union_n"), 4).alias("jaccard"),
-        )
-    )
-
-
-def _ngram_verify_bitmap(
-    cs: DataFrame, gd: DataFrame, vocab: list
-) -> DataFrame:
-    """Exact candidate verification for SMALL gram vocabularies: dense
-    gram ids, one fixed-width bitmap of ceil(V/64) longs per doc, and
-    shared = sum of per-word popcount(AND). Bit-exact equal to
-    |set intersection| because gram ids are dense and unique.
-
-    The gram→id mapping arrives DRIVER-side from the caller's bounded
-    branch probe (≤NGRAM_BITMAP_MAX_VOCAB strings, ~100 KB — the
-    k-means-centroid class of bounded driver state), pre-sorted for
-    determinism, and is broadcast back. The alternative — row_number
-    over the distinct gram table — is an unpartitioned window, i.e. a
-    SinglePartition exchange; this op's plan guard
-    (test_allpairs_dedup_has_no_single_partition_window) rightly
-    forbids that shape anywhere in the plan, bounded or not."""
-    n_vocab = len(vocab)
-    nwords = (n_vocab + 63) // 64
-    spark = cs.sparkSession
-    gids = spark.createDataFrame(
-        [(g, i) for i, g in enumerate(vocab)], "g string, gid int"
-    )
-    docbits = (
-        gd.join(F.broadcast(gids), "g")
-        .groupBy("doc_id")
-        .agg(F.collect_set("gid").alias("gidset"))
-    )
-    # persisted (r12): bm is read once per join side below and Spark
-    # does not reuse the groupBy+bitmap-pack subtree between them; one
-    # fixed-width row per doc, so the cache is ceil(V/64) longs × docs.
-    bm = tracked_persist(
-        docbits.select(
-            "doc_id",
-            F.expr(
-                f"transform(sequence(0, {nwords - 1}), w -> aggregate("
-                "filter(gidset, x -> CAST(x div 64 AS INT) = w), 0L,"
-                " (acc, x) -> acc | shiftleft(1L, CAST(x % 64 AS INT))))"
-            ).alias("bm"),
-        )
-    )
-    b1 = bm.select(F.col("doc_id").alias("d1"), F.col("bm").alias("bm1"))
-    b2 = bm.select(F.col("doc_id").alias("d2"), F.col("bm").alias("bm2"))
-    return (
-        cs.join(b1, "d1")
-        .join(b2, "d2")
-        .select(
-            "d1",
-            "d2",
-            "n1",
-            "n2",
-            F.expr(
-                "aggregate(zip_with(bm1, bm2, (x, y) -> bit_count(x & y)),"
-                " 0, (a, b) -> a + b)"
-            ).cast("bigint").alias("shared"),
         )
     )
 

@@ -43,47 +43,101 @@ def test_dedup_exact_survivors_cover_all_content(spark):
     assert OPS["dedup_exact"].fn(spark, SF).count() == n_distinct
 
 
-def test_allpairs_jaccard_branch_equivalence(spark):
-    """Round-9 vocab-gated verify: the three AllPairs representations
-    (V<=64 bigint-mask collapse, kh-keyed fixed-width-bitmap verify,
-    kh-keyed array_intersect verify) must produce the IDENTICAL pair
-    relation — representation is a plan choice, never a result change.
-    The sf0.01 corpus (V=31) naturally takes the mask branch; the other
-    two are forced through the factored internals."""
-    from insight_gp_import_spark.operators.llm import (
-        _allpairs_candidates,
-        _doc_token_sets,
-        _expand_set_pairs,
-        _jaccard_pairs_mask64,
-        _jaccard_verify_arrays,
-        _jaccard_verify_bitmap,
-        _keyed_set_groups,
-    )
+def test_allpairs_jaccard_branch_equivalence(spark, monkeypatch):
+    """The three set representations (V<=64 bigint mask, kh-keyed
+    fixed-width-bitmap verify, kh-keyed array_intersect verify) must
+    produce the IDENTICAL pair relation — representation is a plan
+    choice, never a result change. The sf0.01 corpus (V=31) naturally
+    takes the mask branch; a probe that reports the vocabulary padded
+    past 64 forces the bitmap branch, and a zero bitmap cap the arrays
+    branch."""
+    from insight_gp_import_spark.operators import llm, pairs
 
-    base = _doc_token_sets(spark, SF)
-    vocab = sorted(
-        r.tok for r in base.select(F.explode("arr").alias("tok")).distinct().collect()
-    )
+    base = llm._doc_token_sets(spark, SF)
+    vocab = pairs.bounded_vocab(base.select(F.explode("arr").alias("tok")))
     assert len(vocab) <= 64, "fixture vocab grew past the mask branch"
-    grp = _keyed_set_groups(base)
-    # r13: _expand_set_pairs consumes the (kh, docs ARRAY) groups
-    # directly (set-level attachment joins + in-JVM fan-out) instead of
-    # an exploded (kh, doc_id) relation
-    grp_docs = grp.select("kh", "docs")
-    gs = grp.select("kh", "arr", "n")
-    cand = _allpairs_candidates(gs)
 
-    def rel(df):
-        return {(r.d1, r.d2, r.jaccard) for r in df.collect()}
+    def rel():
+        return {
+            (r.d1, r.d2, r.jaccard)
+            for r in llm.allpairs_jaccard_pairs(base).collect()
+        }
 
-    mask = rel(_jaccard_pairs_mask64(base, vocab))
-    bitmap = rel(
-        _expand_set_pairs(_jaccard_verify_bitmap(cand, gs, vocab), grp_docs)
-    )
-    arrays = rel(_expand_set_pairs(_jaccard_verify_arrays(cand, gs), grp_docs))
+    mask = rel()
+    # unused ids only widen the bitmaps; every real token keeps one bit
+    padded = sorted(vocab + [f"~pad{i:02d}" for i in range(64)])
+    monkeypatch.setattr(llm, "bounded_vocab", lambda col_df: padded)
+    bitmap = rel()
+    monkeypatch.undo()
+    monkeypatch.setattr(pairs, "BITMAP_MAX_VOCAB", 0)
+    arrays = rel()
     assert mask, "pair relation empty — fixture changed?"
     assert mask == bitmap
     assert mask == arrays
+
+
+def test_kh_branches_match_mask_branch_on_corpus(spark, monkeypatch):
+    """Every local corpus has V=31, so the oracle gates reach only the
+    mask branch. 40 single-token filler docs push V to 71 (kh-keyed
+    bitmap verify; a zero bitmap cap gives the array verify) and add no
+    pair, so over the corpus docs all three set representations must
+    return the same relation, for each set-similarity entry point."""
+    from insight_gp_import_spark.operators import llm, pairs
+    from insight_gp_import_spark.tables import load_table
+
+    docs = load_table(spark, SF, "documents").select("doc_id", "text")
+    filler = spark.createDataFrame(
+        [(10**9 + i, f"filler{i:02d}") for i in range(40)], "doc_id long, text string"
+    )
+    plain = llm.token_sets_from_docs(docs)
+    wide = llm.token_sets_from_docs(docs.unionByName(filler))
+
+    keys = []
+    real_set_jaccard = llm._set_jaccard
+
+    def spy(sets_in):
+        sj = real_set_jaccard(sets_in)
+        keys.append(sj.key)
+        return sj
+
+    monkeypatch.setattr(llm, "_set_jaccard", spy)
+    bitmaps = []
+    real_set_bitmaps = llm.set_bitmaps
+    monkeypatch.setattr(
+        llm, "set_bitmaps", lambda *a: bitmaps.append(1) or real_set_bitmaps(*a)
+    )
+
+    def pairs_of(fn, sets):
+        return {
+            (r.d1, r.d2, r.jaccard) for r in fn(sets).collect() if r.d2 < 10**9
+        }
+
+    def adjacency(sets):
+        edges, memb = llm.jaccard_set_adjacency(sets)
+        # an edge is undirected: its orientation follows the set key's
+        # order, which differs between representations
+        return (
+            {tuple(sorted((r.s1, r.s2))) for r in edges.collect()},
+            {(r.sid, r.doc_id) for r in memb.collect() if r.doc_id < 10**9},
+        )
+
+    def run(sets):
+        return (
+            pairs_of(llm.allpairs_jaccard_pairs, sets),
+            pairs_of(llm.minhash_pairs, sets),
+            adjacency(sets),
+        )
+
+    mask = run(plain)
+    assert keys == ["m"] * 3 and not bitmaps
+    bitmap = run(wide)
+    assert keys[3:] == ["kh"] * 3 and len(bitmaps) == 3
+    monkeypatch.setattr(pairs, "BITMAP_MAX_VOCAB", 0)
+    arrays = run(wide)
+    assert keys[6:] == ["kh"] * 3 and len(bitmaps) == 3
+    assert all(mask[:2]) and all(mask[2]), "relation empty — fixture changed?"
+    assert bitmap == mask
+    assert arrays == mask
 
 
 def test_set_identity_pipe_token_no_alias(spark):

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from insight_gp_import_spark.operators import scans
@@ -50,6 +51,18 @@ def test_jsonl_quarantines_bad_lines(spark):
     rows = out.collect()
     assert len(rows) == 10
     assert all(r.status in (200, 300, 400) for r in rows)
+
+
+@pytest.mark.parametrize(
+    "name,good", [("scan_csv_tolerant", scans.CSV_GOOD_ROWS), ("scan_jsonl", 10)]
+)
+def test_tolerant_scan_counts_after_next_op(spark, name, good):
+    """A tolerant scan's frame stays countable after the next op call has
+    released that op's caches: a count() reads no data column, which a
+    corrupt-record file scan rejects unless the parse is cached."""
+    out = OPS[name].fn(spark, SF)
+    OPS["agg_hash_groupby"].fn(spark, SF)
+    assert out.count() == good
 
 
 def test_partitioned_sink_round_trip(spark):

@@ -58,11 +58,14 @@ def test_cosine_self_pairs_cross_block_tiles(spark, monkeypatch, score):
 
 
 def test_pair_primitives_written_once():
-    """The hash blocking and the increasing-pairs expansion live only in
+    """The hash blocking, the increasing-pairs expansion, the set bitmap
+    pack and the bounded vocabulary probe live only in
     operators/pairs.py."""
     patterns = {
         "hash blocking": re.compile(r"pmod\(hash\("),
         "increasing-pairs expansion": re.compile(r"slice\([^,]+, i \+ 2,"),
+        "bitmap pack": re.compile(r"shiftleft\(1L, CAST\(x % 64"),
+        "vocabulary probe": re.compile(r"MAX_VOCAB\s*\+\s*1"),
     }
     found = {name: [] for name in patterns}
     for path in sorted(PKG.rglob("*.py")):

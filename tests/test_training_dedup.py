@@ -316,15 +316,17 @@ def test_ngram_verify_branches_agree(spark, monkeypatch):
     routed packed-gram arrays, incl. the giant-pair banding) must
     produce IDENTICAL verified pairs — representation and routing are
     plan choices, never semantics (r8 verdict item 3). Forcing
-    NGRAM_BITMAP_MAX_VOCAB=0 exercises the array branch and
+    pairs.BITMAP_MAX_VOCAB=0 exercises the array branch and
     NGRAM_SPLIT_GRAMS=8 forces every pair through the banded giant-
     pair path, which the small-vocab gate SFs otherwise never touch."""
+    from insight_gp_import_spark.operators import pairs
+
     sf = "/root/testdata/sf0.001"
     fn = OPS["dedup_ngram_jaccard"].fn
     default = {(r.d1, r.d2): r.jaccard for r in fn(spark, sf).collect()}
     assert default  # non-degenerate fixture
 
-    monkeypatch.setattr(td, "NGRAM_BITMAP_MAX_VOCAB", 0)
+    monkeypatch.setattr(pairs, "BITMAP_MAX_VOCAB", 0)
     routed = {(r.d1, r.d2): r.jaccard for r in fn(spark, sf).collect()}
     assert routed == default
 
