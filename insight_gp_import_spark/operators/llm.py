@@ -322,9 +322,8 @@ _MASK_GIDS = "filter(sequence(0, 63), b -> (shiftright(m, b) & 1) = 1)"
 class _SetJaccard(NamedTuple):
     key: str  # "m" (BIGINT mask) or "kh"
     jac: DataFrame  # (<key>1, <key>2, j) surviving set pairs, <key>1 < <key>2
-    groups: DataFrame  # (<key>, sid, arr, ...) one row per distinct set
+    groups: DataFrame  # (<key>, sid, docs, arr, ...) one row per distinct set
     members: DataFrame  # (<key>, docs) each set's sorted member doc_ids
-    doc_mask: DataFrame | None  # (doc_id, m) each doc's mask, mask branch only
 
 
 def _set_jaccard(sets_in: DataFrame) -> _SetJaccard:
@@ -385,15 +384,17 @@ def _set_jaccard(sets_in: DataFrame) -> _SetJaccard:
         groups = mdocs.select(
             "m",
             F.element_at("docs", 1).alias("sid"),
+            "docs",
             F.array(*[F.lit(t) for t in vocab]).alias("varr"),
         ).select(
             "m",
             "sid",
+            "docs",
             F.expr(f"transform({_MASK_GIDS}, b -> element_at(varr, b + 1))").alias(
                 "arr"
             ),
         )
-        return _SetJaccard("m", jac, groups, mdocs, doc_mask)
+        return _SetJaccard("m", jac, groups, mdocs)
     groups = _keyed_set_groups(sets_in)
     gs = groups.select("kh", "arr", "n")
     stoks = gs.select("kh", "n", F.explode("arr").alias("tok"))
@@ -417,7 +418,7 @@ def _set_jaccard(sets_in: DataFrame) -> _SetJaccard:
         F.col("n1"),
         F.col("n2"),
     )
-    return _SetJaccard("kh", jac, groups, groups.select("kh", "docs"), None)
+    return _SetJaccard("kh", jac, groups, groups.select("kh", "docs"))
 
 
 def _over_threshold(
@@ -532,15 +533,11 @@ def jaccard_set_adjacency(sets_in: DataFrame) -> tuple[DataFrame, DataFrame]:
     jaccard-1 pairs add nothing), and a cross-set doc pair survives the
     threshold iff its set pair does, so the labels (min doc_id per
     component = min sid per set component) transfer through membership.
-    The mask branch derives sid and membership from the per-doc masks,
-    which keeps its plan free of the member-list groups."""
-    key, jac, groups, _, doc_mask = _set_jaccard(sets_in)
-    if doc_mask is None:
-        sm = groups.select("kh", "sid")
-        memb = groups.select("sid", F.explode("docs").alias("doc_id"))
-    else:
-        sm = doc_mask.groupBy("m").agg(F.min("doc_id").alias("sid"))
-        memb = doc_mask.join(sm, "m").select("sid", "doc_id")
+    Both set keys read sid and the sorted member lists from the
+    groups."""
+    key, jac, groups, _ = _set_jaccard(sets_in)
+    sm = groups.select(key, "sid")
+    memb = groups.select("sid", F.explode("docs").alias("doc_id"))
     edges = (
         jac.join(
             sm.select(F.col(key).alias(f"{key}1"), F.col("sid").alias("s1")),
@@ -647,7 +644,7 @@ def minhash_pairs(sets_in: DataFrame) -> DataFrame:
     The md5 minhash and band-hash definitions, the threshold and the
     DuckDB oracle are those of the op; each filter is lossless for the
     output relation."""
-    key, jac, groups, members, _ = _set_jaccard(sets_in)
+    key, jac, groups, members = _set_jaccard(sets_in)
     # a mask set bands under its sid and maps back to m; a kh set bands
     # under kh with its sid joined on
     bid = "sid" if key == "m" else key

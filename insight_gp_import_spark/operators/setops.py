@@ -332,7 +332,7 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     (parent = key/10, a 10-ary tree over customer keys), each key
     walked to its single-digit root with the hop count. This is the
     declarative twin of the driver-side iterate-to-fixpoint loops
-    (dedup_cluster's label propagation): the ENGINE owns the loop —
+    (dedup_cluster's star contraction): the ENGINE owns the loop —
     each recursion step is a distributed self-join, termination is
     the empty-delta fixpoint, no collect() anywhere. DuckDB runs the
     near-identical statement; hash-match proves step semantics AND

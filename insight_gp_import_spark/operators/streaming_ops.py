@@ -761,7 +761,7 @@ def stream_complete_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     low-cardinality dashboard key (|event_types| groups), the
     documented wrong choice for unbounded keys.
     """
-    from insight_gp_import_spark.streaming import read_events_stream
+    from insight_gp_import_spark.streaming import read_events_stream, run_to_memory
 
     staged = _stage_events_files(spark, sf_dir)
     name = _qname("complete", sf_dir)
@@ -776,17 +776,7 @@ def stream_complete_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("cents").cast("bigint").alias("cents"),
         )
     )
-    from insight_gp_import_spark.streaming.runtime import scaled_state_partitions
-
-    with scaled_state_partitions(spark):
-        q = (
-            totals.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+    run_to_memory(totals, name, output_mode="complete")
     return spark.table(name).select(
         "event_type",
         "cnt",

@@ -1124,8 +1124,6 @@ def embed_outlier_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CLUSTER_MAX_ITERS = 50
-
 # DuckDB-side connected components for the cluster-family oracles —
 # r10 bounded reformulation (r9 verdict item 5). The original
 # `WITH RECURSIVE walk(node, label)` spec enumerates EVERY (node,
@@ -1238,117 +1236,60 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     per component. Every doc appears (singletons are their own
     cluster), so downstream filtering is one semi-join on is_survivor.
 
-    Iterative min-label propagation: each round, every node takes the
-    min label over itself and its neighbors; fixpoint when no label
-    changes (driver-side count per round — the loop is iterative by
-    nature, like Pregel). Rounds ≤ graph diameter; near-dup components
-    are dense blobs of mutual duplicates, so the fixpoint lands in a
-    handful of rounds (sf0.01's 341-doc giant component converges in
-    ~5). ``localCheckpoint`` truncates the growing lineage each round
-    — without it the plan doubles per iteration. At extreme scale the
-    same loop upgrades to large-star/small-star (O(log²) rounds) with
-    identical output; the oracle is an independent formulation
-    entirely (DuckDB unrolled min-label+pointer-jump propagation
-    with a checked convergence sentinel — see _cc_labels_cte).
+    Components run on the DISTINCT-SET graph of
+    :func:`jaccard_set_adjacency` (a few thousand set nodes at sf0.1
+    instead of millions of doc pairs) and transfer to docs exactly
+    through its membership: min doc_id per component == min sid per
+    set component, because sid is each set's minimum member. Labels
+    are exact BIGINT doc_ids on every path.
+
+    The set-pair count picks the algorithm. Up to ``CC_LOCAL_MAX_EDGES``
+    pairs the edges are collected once and a driver-side min-root
+    union-find labels them: at KB-scale state a distributed loop is
+    nothing but per-round scheduling. Above it the same edges run
+    through large-star/small-star (:func:`_cc_star_labels`, O(log² n)
+    rounds whatever the component diameter). The oracle is an
+    independent formulation (DuckDB unrolled min-label + pointer-jump
+    propagation with a checked convergence sentinel, _cc_labels_cte).
     """
-    # r12 optimization (guide §8: decide on a lightweight proxy, expand
-    # once at the end): propagation runs on the DISTINCT-SET graph —
-    # ~4k set nodes / set-level edges at sf0.1 — instead of the
-    # expanded doc-pair graph (~2.5M pairs → 5M directed edges), and
-    # doc labels come from one membership join at the end. Components
-    # transfer exactly (jaccard_set_adjacency's docstring has the
-    # argument); min doc_id per component == min sid per
-    # set-component because sid is each set's minimum member.
     from insight_gp_import_spark.operators.llm import (
         _doc_token_sets,
         jaccard_set_adjacency,
     )
 
     sedges, memb = jaccard_set_adjacency(_doc_token_sets(spark, sf_dir))
-    memb = tracked_persist(memb)
     # tracked_persist, not a bare cache(): the registry flushes it at
     # the next op call, so a 500-op sweep never accumulates edge sets
-    # in the block manager (guide §5: unpersist when done). No
-    # .distinct(): set pairs are unique by construction and min-label
-    # propagation is duplicate-invariant anyway.
-    #
-    # r13 (VERDICT item 3, guide §1.2 "the distributed algorithm"):
-    # the set-level edge relation is a LIGHTWEIGHT PROXY of the doc
-    # graph (distinct-set cardinality — the §8 design the components
-    # already run on), so its size is knowable for one count job, and
-    # when it is SMALL the whole fixpoint loop is per-round scheduling
-    # overhead on KB-scale state: ~5 rounds × (join + agg + checkpoint
-    # + convergence count) to propagate labels over a few thousand
-    # nodes. Below a bounded threshold (CC_LOCAL_MAX_EDGES pairs) the
-    # edges are collected ONCE and a driver-side min-root union-find
-    # labels the components — the same
-    # vocab-probe-style two-level plan choice as the mask64 branch,
-    # with the same bounded-driver-state class as the PCA Gram
-    # collect. Above the threshold (any genuinely large corpus) the
-    # distributed loop runs exactly as before, on the edge relation
-    # persisted PRE-PARTITIONED by the join key (hash by src at the
-    # shuffle partition count) and pre-sorted — every round's
-    # propagation join then consumes the cached partitioning instead
-    # of re-shuffling the full directed edge set per round when the
-    # label side is too big to broadcast (the 100 TB slow path).
+    # in the block manager. Set pairs are unique by construction, so
+    # no .distinct().
     sedges = tracked_persist(sedges)
-    n_pairs = sedges.count()
-    if n_pairs == 0:
-        labels = None
-    elif n_pairs <= CC_LOCAL_MAX_EDGES:
-        labels = _cc_local_labels(spark, _collect_pairs(sedges))
+    if sedges.count() <= CC_LOCAL_MAX_EDGES:
+        labels = _cc_local_labels(spark, sedges)
     else:
-        labels = _cc_loop_labels(spark, sedges)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    out = docs.join(memb, "doc_id", "left")
-    if labels is not None:
-        out = out.join(labels.withColumnRenamed("node", "sid"), "sid", "left")
-    else:
-        out = out.withColumn("label", F.lit(None).cast("long"))
-    # coalesce(label, sid, doc_id): connected nodes carry their
-    # component min; an edgeless set's members cluster at its sid (its
-    # min member); docs without a set row fall back to themselves.
-    # (The loop path used to label every node incl. singletons, making
-    # the sid leg redundant there — keeping it lets both paths share
-    # one tail with identical results.)
-    root = F.coalesce("label", "sid", "doc_id")
-    return out.select(
-        "doc_id",
-        root.alias("cluster_id"),
-        (F.col("doc_id") == root).alias("is_survivor"),
-    )
+        labels = _cc_star_labels(sedges, "dedup_cluster")
+    return _doc_clusters(spark, sf_dir, memb, labels)
 
 
 # Collect-and-union-find threshold for the CC family's set-level edge
 # relation: 1M (s1, s2) BIGINT pairs ≈ 16 MB on the driver — the same
 # bounded-collect class as broadcast build sides, far under
 # spark.driver.maxResultSize. Tests set it to 0 to force the
-# distributed loop and pin branch equivalence.
+# distributed path and pin branch equivalence.
 CC_LOCAL_MAX_EDGES = 1_000_000
 
-
-def _collect_pairs(sedges: DataFrame):
-    """Driver-side (s1, s2) pair list. ``toArrow()`` (Spark 4) moves
-    the columns as Arrow buffers — measured ~8× faster than row
-    ``collect()``'s per-row pickling at the 511k-pair sf0.1 relation —
-    with a ``collect()`` fallback for sessions/plans where the Arrow
-    path is unavailable. Values are identical either way (exact
-    BIGINTs)."""
-    try:
-        tbl = sedges.toArrow()
-        return list(
-            zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist())
-        )
-    except Exception:
-        return sedges.collect()
+# Star contraction converges in O(log² n) rounds; reaching this many
+# without a fixpoint raises instead of returning partial labels.
+BIGSTAR_MAX_ROUNDS = 30
 
 
-def _cc_local_labels(spark: SparkSession, pairs) -> DataFrame:
-    """(node, label) for every node appearing in ``pairs`` via
+def _cc_local_labels(spark: SparkSession, sedges: DataFrame) -> DataFrame:
+    """(node, label) for every node of the (s1, s2) pair relation via
     driver-side union-find with min-root unions: the root of every
     tree is its component's minimum node seen so far, so after all
-    unions find(x) is exactly the component minimum — the identical
-    labeling the distributed min-label fixpoint converges to."""
+    unions find(x) is exactly the component minimum — the labeling
+    :func:`_cc_star_labels` produces. ``toArrow()`` moves the pairs as
+    Arrow buffers, ~8× faster than row ``collect()`` at sf0.1's 511k
+    pairs."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -1359,9 +1300,9 @@ def _cc_local_labels(spark: SparkSession, pairs) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
+    tbl = sedges.toArrow()
     nodes: set[int] = set()
-    for row in pairs:
-        x, y = int(row[0]), int(row[1])
+    for x, y in zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist()):
         nodes.add(x)
         nodes.add(y)
         a, b = find(x), find(y)
@@ -1376,48 +1317,104 @@ def _cc_local_labels(spark: SparkSession, pairs) -> DataFrame:
     )
 
 
-def _cc_loop_labels(spark: SparkSession, sedges: DataFrame) -> DataFrame:
-    """Distributed min-label fixpoint over the (persisted) set-level
-    pair relation — the above-threshold path of dedup_cluster."""
-    edges = tracked_persist(
-        sedges.union(sedges.select("s2", "s1"))
-        .toDF("src", "dst")
-        .repartition(shuffle_width(spark), "src")
-        .sortWithinPartitions("src")
-    )
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-    labels = nodes.select("node", F.col("node").alias("label"))
-    for _ in range(CLUSTER_MAX_ITERS):
-        # r12 optimization (guide §2.4): the convergence check used to
-        # re-JOIN new labels against old ones — a second shuffle join
-        # per round. Carrying the old label THROUGH the min-label
-        # aggregation (every node contributes exactly one non-null
-        # `old` from the labels side, so max(old) recovers it) makes
-        # the changed-count a plain filter over the already-checkpointed
-        # result: zero extra shuffles per round.
-        prop = edges.join(
-            labels.withColumnRenamed("node", "src"), "src"
-        ).select(
-            F.col("dst").alias("node"),
-            "label",
-            F.lit(None).cast("long").alias("old"),
+def _cc_star_labels(sedges: DataFrame, op_name: str) -> DataFrame:
+    """(node, label = component minimum) for every non-minimum node of
+    the (s1, s2) pair relation, via alternating large-star / small-star
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC'14). Component minima have no row; the caller's coalesce
+    labels them as themselves.
+
+    Min-label propagation needs rounds ~ graph DIAMETER (a 10⁶-node
+    chain needs 10⁶ rounds); large-star hangs every larger neighbor
+    off the neighborhood minimum and small-star flattens the remaining
+    chains, contracting any component in O(log² n) rounds. Each round
+    is two keyed aggregations over the edge set, with its lineage cut
+    by localCheckpoint; the fixpoint is a star per component pointing
+    at its minimum. No fixpoint within ``BIGSTAR_MAX_ROUNDS`` raises a
+    RuntimeError naming ``op_name``."""
+    # the (u, v) relation is canonicalized u < v and unique by
+    # construction, so no .distinct(); the localCheckpoint cuts the
+    # AllPairs lineage.
+    edges = sedges.select(
+        F.least("s1", "s2").alias("u"), F.greatest("s1", "s2").alias("v")
+    ).localCheckpoint()
+    # the fixpoint test needs |new| == |old|, and the previous round's
+    # count is already known: one count job per round (which also
+    # materializes the lazy checkpoint below), and the exceptAll probe
+    # only runs once the counts match.
+    n_edges = edges.count()
+
+    for _ in range(BIGSTAR_MAX_ROUNDS):
+        # Large-star: per node u (over BOTH directions), every neighbor
+        # v > u re-attaches to m = min(N(u) ∪ {u}).
+        bidir = edges.union(edges.select("v", "u")).toDF("u", "v")
+        mins = bidir.groupBy("u").agg(
+            F.least(F.min("v"), F.first("u")).alias("m")
         )
-        # r13: LAZY localCheckpoint — the changed-count action both
-        # materializes the checkpoint and answers convergence, ONE job
-        # per round instead of the eager checkpoint's two (guide §1.2:
-        # per-round fixed overhead dominates the KB-scale label state).
-        new = (
-            labels.select("node", "label", F.col("label").alias("old"))
-            .unionByName(prop)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"), F.max("old").alias("old"))
+        after_large = (
+            bidir.join(mins, "u")
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+        )
+        # Small-star: direct edges high→low; per hi, all smaller
+        # neighbors AND hi itself attach to m = min of the smaller set.
+        hilo = after_large.select(
+            F.greatest("u", "v").alias("hi"), F.least("u", "v").alias("lo")
+        ).distinct()
+        smins = hilo.groupBy("hi").agg(F.min("lo").alias("m"))
+        after_small = (
+            hilo.join(smins, "hi")
+            .select(F.col("lo").alias("u"), F.col("m").alias("v"))
+            .union(smins.select(F.col("hi").alias("u"), F.col("m").alias("v")))
+            .filter(F.col("u") != F.col("v"))
+            .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+            .distinct()
             .localCheckpoint(eager=False)
         )
-        changed = new.filter(F.col("label") != F.col("old")).count()
-        labels = new.select("node", "label")
-        if changed == 0:
+        # Both relations are distinct sets, so A ⊆ B ∧ |A| = |B| ⟺
+        # A = B: one exceptAll direction, skipped while the counts
+        # differ.
+        n_new = after_small.count()
+        if (
+            n_new == n_edges
+            and after_small.exceptAll(edges).limit(1).count() == 0
+        ):
             break
-    return labels
+        edges, n_edges = after_small, n_new
+    else:
+        raise RuntimeError(
+            f"{op_name}: connected components reached no fixpoint within "
+            f"BIGSTAR_MAX_ROUNDS={BIGSTAR_MAX_ROUNDS} star rounds"
+        )
+    # at the fixpoint every non-minimum node carries exactly one edge,
+    # to its component minimum; groupBy(min) is belt-and-braces.
+    return after_small.groupBy(F.col("u").alias("node")).agg(
+        F.min("v").alias("label")
+    )
+
+
+def _doc_clusters(
+    spark: SparkSession, sf_dir: str, memb: DataFrame, labels: DataFrame
+) -> DataFrame:
+    """(doc_id, cluster_id, is_survivor) for every document from the
+    (sid, doc_id) membership and the set-level (node, label) relation:
+    connected sets carry their component minimum, an edgeless set's
+    members cluster at its sid (its min member), and docs without a
+    set row fall back to themselves."""
+    root = F.coalesce("label", "sid", "doc_id")
+    return (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id")
+        .join(tracked_persist(memb), "doc_id", "left")
+        .join(labels.withColumnRenamed("node", "sid"), "sid", "left")
+        .select(
+            "doc_id",
+            root.alias("cluster_id"),
+            (F.col("doc_id") == root).alias("is_survivor"),
+        )
+    )
 
 
 LEV_BLOCK_CHARS = 10  # n_chars blocking bucket width
@@ -1487,123 +1484,25 @@ def dedup_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-BIGSTAR_MAX_ROUNDS = 30
-
-
 @op(
     "dedup_cluster_bigstar",
     oracle=CLUSTER_ORACLE_SQL,
     category=CAT,
 )
 def dedup_cluster_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the O(log² n)-round upgrade path dedup_cluster's
-    docstring promises, implemented as a first-class op and
-    hash-checked against the SAME independent DuckDB oracle
-    (unrolled min-label propagation with a convergence sentinel,
-    _cc_labels_cte) — so both algorithms are proven to produce
-    identical clusters.
-
-    Why this wins at 100 TB: min-label propagation needs rounds ~
-    graph DIAMETER (a 10⁶-node chain needs 10⁶ rounds); large-star
-    hangs every larger neighbor off the neighborhood minimum and
-    small-star flattens the remaining chains, contracting any
-    component in O(log²) rounds regardless of diameter. Each round is
-    two keyed aggregations over the edge set — no driver-side data,
-    lineage truncated per round with localCheckpoint. Convergence =
-    edge set reaches a fixpoint (stars pointing at component minima);
-    the per-round driver check is O(1) counts, like dedup_cluster's.
-    """
-    # r12: star contraction on the DISTINCT-SET graph (see
-    # dedup_cluster — same component-transfer argument via
-    # jaccard_set_adjacency); the (u, v) relation is canonicalized
-    # u < v on sids and unique by construction, so no .distinct() —
-    # the localCheckpoint still cuts the AllPairs lineage.
+    """dedup_cluster's components with the distributed path forced:
+    large-star/small-star (:func:`_cc_star_labels`) on the
+    distinct-set graph at every size, so the O(log² n)-round algorithm
+    the large-corpus path relies on is hash-checked on its own against
+    the SAME independent DuckDB oracle (_cc_labels_cte)."""
     from insight_gp_import_spark.operators.llm import (
         _doc_token_sets,
         jaccard_set_adjacency,
     )
 
     sedges, memb = jaccard_set_adjacency(_doc_token_sets(spark, sf_dir))
-    memb = tracked_persist(memb)
-    edges = sedges.select(
-        F.least("s1", "s2").alias("u"), F.greatest("s1", "s2").alias("v")
-    ).localCheckpoint()
-    # r13 (VERDICT item 3): carry |edges| across rounds — the fixpoint
-    # test needs |new| == |old| and the count of the PREVIOUS round's
-    # relation is already known, so each round pays one count job (which
-    # also materializes the lazy checkpoint below), not two, and the
-    # exceptAll probe only runs when the counts actually match.
-    n_edges = edges.count()
-
-    for _ in range(BIGSTAR_MAX_ROUNDS):
-        # Large-star: per node u (over BOTH directions), every neighbor
-        # v > u re-attaches to m = min(N(u) ∪ {u}).
-        bidir = edges.union(edges.select("v", "u")).toDF("u", "v")
-        mins = bidir.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        after_large = (
-            bidir.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # Small-star: direct edges high→low; per hi, all smaller
-        # neighbors AND hi itself attach to m = min of the smaller set.
-        hilo = after_large.select(
-            F.greatest("u", "v").alias("hi"), F.least("u", "v").alias("lo")
-        ).distinct()
-        smins = hilo.groupBy("hi").agg(F.min("lo").alias("m"))
-        after_small = (
-            hilo.join(smins, "hi")
-            .select(F.col("lo").alias("u"), F.col("m").alias("v"))
-            .union(smins.select(F.col("hi").alias("u"), F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        # Fixpoint when the (canonicalized) edge set is unchanged.
-        # r12 optimization: both relations are distinct sets, so
-        # A ⊆ B ∧ |A| = |B| ⟺ A = B — one exceptAll direction plus two
-        # cheap counts over already-checkpointed data replaces the
-        # second exceptAll's full shuffle join per round. r13: the
-        # count also MATERIALIZES the lazy checkpoint (one job), the
-        # old relation's count is carried from the previous round, and
-        # the exceptAll probe is skipped entirely while the counts
-        # still differ.
-        n_new = after_small.count()
-        if (
-            n_new == n_edges
-            and after_small.exceptAll(edges).limit(1).count() == 0
-        ):
-            edges = after_small
-            break
-        edges = after_small
-        n_edges = n_new
-
-    # Converged: every non-min set node carries exactly one edge to its
-    # component min (star). groupBy(min) is belt-and-braces. Doc labels
-    # expand through the membership join (r12): a doc's cluster is its
-    # set's root, or its set's own sid for edgeless sets.
-    roots = edges.groupBy(F.col("u").alias("sid")).agg(
-        F.min("v").alias("root")
-    )
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return (
-        docs.join(memb, "doc_id", "left")
-        .join(roots, "sid", "left")
-        .select(
-            "doc_id",
-            F.coalesce("root", "sid", "doc_id").alias("cluster_id"),
-            (
-                F.col("doc_id") == F.coalesce("root", "sid", "doc_id")
-            ).alias("is_survivor"),
-        )
-    )
+    labels = _cc_star_labels(sedges, "dedup_cluster_bigstar")
+    return _doc_clusters(spark, sf_dir, memb, labels)
 
 
 KMEANS_K = 4
@@ -2380,8 +2279,7 @@ def dedup_survivor_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     disagree). Only multi-member clusters are reported — the
     singleton majority has nothing to decide.
 
-    Reuses dedup_cluster's components verbatim (same AllPairs pairs,
-    same min-label propagation), then one argmax per cluster via the
+    Reuses dedup_cluster's components verbatim, then one argmax per cluster via the
     struct-max trick (max (n_chars, −doc_id) — one aggregate, no
     window, no self-join); the cluster relation is tiny versus the
     corpus, so policy selection costs nothing at 100 TB. The oracle

@@ -2355,12 +2355,10 @@ def text_langid_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts with one rounded division; the marginal-product table is
     ≤|langs|² cells.
     """
-    from insight_gp_import_spark.registry import REGISTRY
-
-    d1 = REGISTRY["text_langid"].fn(spark, sf_dir).select(
+    d1 = text_langid(spark, sf_dir).select(
         "doc_id", F.col("predicted").alias("p1")
     )
-    d2 = REGISTRY["text_langid_ngram"].fn(spark, sf_dir).select(
+    d2 = text_langid_ngram(spark, sf_dir).select(
         "doc_id", F.col("predicted").alias("p2")
     )
     # r12: persist the tiny prediction-pair relation — it is referenced
@@ -2452,18 +2450,21 @@ def corpus_sampler_bias_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     per sampler (s·N·10⁶ div (n·S)); both samplers carry n_chars in
     their declared relations. Three one-row aggregates unioned.
     """
-    from insight_gp_import_spark.registry import REGISTRY
+    from insight_gp_import_spark.operators.projection import (
+        sample_stratified,
+        sample_weighted_reservoir,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
     base = docs.agg(
         F.sum("n_chars").cast("bigint").alias("s"),
         F.count("*").cast("bigint").alias("n"),
     )
-    uni = REGISTRY["sample_stratified"].fn(spark, sf_dir).agg(
+    uni = sample_stratified(spark, sf_dir).agg(
         F.sum("n_chars").cast("bigint").alias("s"),
         F.count("*").cast("bigint").alias("n"),
     )
-    wres = REGISTRY["sample_weighted_reservoir"].fn(spark, sf_dir).agg(
+    wres = sample_weighted_reservoir(spark, sf_dir).agg(
         F.sum("n_chars").cast("bigint").alias("s"),
         F.count("*").cast("bigint").alias("n"),
     )

@@ -43,7 +43,6 @@ REGISTRY: dict[str, Op] = {}
 import threading as _threading
 
 _TRACKED_PERSISTS: list[DataFrame] = []
-_OP_DEPTH = 0
 _PERSIST_LOCK = _threading.Lock()
 
 
@@ -75,17 +74,11 @@ def op(name: str, oracle: str, category: str = "") -> Callable[[QueryFn], QueryF
             raise ValueError(f"duplicate op id {name!r}")
 
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # Flush only at TOP-LEVEL invocations: composed ops (an op
-            # building on another op's fn) must not drop the outer op's
-            # tracked caches mid-plan-build.
-            global _OP_DEPTH
-            if _OP_DEPTH == 0:
-                flush_tracked_persists()
-            _OP_DEPTH += 1
-            try:
-                return fn(spark, sf_dir)
-            finally:
-                _OP_DEPTH -= 1
+            # Composed ops call the plain function of the op they build
+            # on (the decorator returns it), never this wrapper: a flush
+            # mid-plan-build would drop the outer op's tracked caches.
+            flush_tracked_persists()
+            return fn(spark, sf_dir)
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__

@@ -62,11 +62,20 @@ def test_normalize_plan_masks_session_counters():
         "[plan_id={p}]\n"
         "(1) Scan ExistingRDD\n"
         "Arguments: [t_pm#{b}], MapPartitionsRDD[{r}] at applySchemaToPythonRDD\n"
+        "(2) Scan csv\n"
+        "Location: InMemoryFileIndex [file:/tmp/igis-scratch-{root}/igis-compact-src-{d}/events]\n"
     )
-    one = ops.normalize_plan(dump.format(a=12, b=7, p=132, r=127))
-    two = ops.normalize_plan(dump.format(a=905, b=88, p=1727, r=350))
+    one = ops.normalize_plan(
+        dump.format(a=12, b=7, p=132, r=127, root="q3_x9k2a", d="abcdefgh")
+    )
+    two = ops.normalize_plan(
+        dump.format(a=905, b=88, p=1727, r=350, root="0b7_ztr1", d="k2j_9m0p")
+    )
     assert one == two
     assert "l_orderkey#NL, 8)" in one
     assert "[plan_id=N]" in one and "MapPartitionsRDD[N]" in one
+    # the scratch root and the per-call directory are random; the op's
+    # directory prefix and the path below it are plan content
+    assert "file:/tmp/igis-scratch-N/igis-compact-src-N/events]" in one
     # operator numbers and literals are plan shape, not counters
     assert one.startswith("(3) Exchange\n") and "(1) Scan ExistingRDD" in one

@@ -326,11 +326,11 @@ def test_allpairs_dedup_has_no_single_partition_window(spark):
 @pytest.mark.parametrize(
     "name,exchanges",
     [
-        ("dedup_cluster", 8),
+        ("dedup_cluster", 6),
         ("dedup_near_jaccard", 14),
         ("dedup_near_minhash", 26),
         ("dedup_ngram_jaccard", 16),
-        ("dedup_cluster_bigstar", 10),
+        ("dedup_cluster_bigstar", 8),
     ],
 )
 def test_dedup_plan_exchange_count(spark, name, exchanges):

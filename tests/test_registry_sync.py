@@ -57,3 +57,22 @@ def test_driver_contract_exposes_every_op(spark):
     ]
     assert not no_twin, f"ops without a DuckDB twin: {no_twin}"
     assert set(contract.oracle_sql()) == set(contract.queries())
+
+
+def test_op_bodies_call_plain_functions():
+    """An op that builds on another op calls its plain function (what
+    ``@op`` returns), never the registered wrapper: the wrapper flushes
+    the tracked persists, and a flush mid-plan-build would drop the
+    outer op's caches."""
+    import ast
+
+    hits = []
+    for path in sorted((REPO / "insight_gp_import_spark" / "operators").rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "fn"
+                and isinstance(node.value, ast.Subscript)
+            ):
+                hits.append(f"{path.name}:{node.lineno}")
+    assert not hits, f"op bodies calling a registered wrapper: {hits}"

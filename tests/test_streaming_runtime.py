@@ -286,6 +286,16 @@ def test_stateful_totals_rocksdb_state_store(spark, events_dir):
     )
 
 
+def test_stream_complete_mode_times_out_loudly(spark, monkeypatch):
+    """An unfinished complete-mode query raises instead of returning a
+    partial memory table."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", lambda self, t=None: False)
+    with pytest.raises(TimeoutError, match="did not finish"):
+        load_all_ops()["stream_complete_mode"].fn(spark, SF)
+
+
 def test_transform_with_state_gate():
     """The tws path must exist and be chosen iff protobuf is present;
     the fallback twin shares semantics + oracle, so the declared

@@ -229,7 +229,8 @@ def test_kmeans_k1_centroid_is_global_mean(spark):
 
 
 def test_bigstar_equals_label_propagation(spark):
-    """Large-star/small-star and min-label propagation must produce
+    """dedup_cluster (driver-side union-find at this SF) and
+    dedup_cluster_bigstar (large-star/small-star) must produce
     identical clusterings (same survivors, same components)."""
     a = {r.doc_id: r.cluster_id
          for r in OPS["dedup_cluster"].fn(spark, SF).collect()}
@@ -469,8 +470,8 @@ def test_sweep_spine_tier_matches_oracle(spark, monkeypatch):
 
 
 def test_dedup_cluster_local_vs_distributed_cc(spark, monkeypatch):
-    """r13: dedup_cluster's bounded-collect union-find branch (fires at
-    every test SF) and the distributed min-label fixpoint
+    """dedup_cluster's bounded-collect union-find branch (fires at
+    every test SF) and its distributed large-star/small-star branch
     (CC_LOCAL_MAX_EDGES=0 forces it) must produce the IDENTICAL
     (doc_id, cluster_id, is_survivor) relation — the CC engine is a
     plan choice, never a result change."""
@@ -485,3 +486,15 @@ def test_dedup_cluster_local_vs_distributed_cc(spark, monkeypatch):
     }
     assert rel_local == rel_loop
     assert rel_local  # fixture sanity: non-empty
+
+
+@pytest.mark.parametrize("name", ["dedup_cluster_bigstar", "dedup_cluster"])
+def test_cc_round_cap_raises(spark, monkeypatch, name):
+    """Star contraction takes 3 rounds at sf0.01 (the third confirms the
+    fixpoint). A cap below that must raise, naming the op, instead of
+    returning unconverged labels; CC_LOCAL_MAX_EDGES=0 sends
+    dedup_cluster down the same distributed path."""
+    monkeypatch.setattr(td, "CC_LOCAL_MAX_EDGES", 0)
+    monkeypatch.setattr(td, "BIGSTAR_MAX_ROUNDS", 2)
+    with pytest.raises(RuntimeError, match=f"^{name}: .*BIGSTAR_MAX_ROUNDS=2"):
+        OPS[name].fn(spark, SF).collect()

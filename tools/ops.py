@@ -79,18 +79,20 @@ def explain(df) -> str:
     return df._jdf.queryExecution().explainString(mode.fromString("formatted"))
 
 
-# Counters that number expressions, plans and RDDs session-wide: equal
-# plans built in different sessions (or after different ops) differ only
-# in these.
+# Counters that number expressions, plans and RDDs session-wide, and the
+# random names of scratch_dir's per-process root and per-call directory
+# (``igis-scratch-<8>/<prefix><8>``): equal plans built in different
+# sessions (or after different ops) differ only in these.
 _PLAN_COUNTERS = (
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"\bplan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"(igis-scratch-)\w{8}(/[\w-]*?-)\w{8}\b"), r"\1N\2N"),
 )
 
 
 def normalize_plan(plan: str) -> str:
-    """``plan`` with expression ids, plan ids and RDD ids masked."""
+    """``plan`` with expression, plan and RDD ids and scratch paths masked."""
     for pat, mask in _PLAN_COUNTERS:
         plan = pat.sub(mask, plan)
     return plan
