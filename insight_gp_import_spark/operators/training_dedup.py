@@ -2283,8 +2283,8 @@ def dedup_survivor_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct-max trick (max (n_chars, −doc_id) — one aggregate, no
     window, no self-join); the cluster relation is tiny versus the
     corpus, so policy selection costs nothing at 100 TB. The oracle
-    recomputes the clusters through the INDEPENDENT recursive-CTE
-    formulation plus a correlated-subquery argmax.
+    recomputes the clusters through the independent unrolled
+    propagation (_cc_labels_cte) plus a correlated-subquery argmax.
     """
     clusters = dedup_cluster(spark, sf_dir).select("doc_id", "cluster_id")
     docs = load_table(spark, sf_dir, "documents").select(
